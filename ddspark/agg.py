@@ -47,9 +47,7 @@ __all__ = [
     "build_cells",
     "assemble_cells",
     "sketch_agg",
-    "finalize_cells",
     "finalize_cells_sql",
-    "finalize_cells_vec",
     "finalize_quantiles",
     "quantile_sketch",
     "quantile_sketch_multi",
@@ -425,200 +423,6 @@ def _sketch_from_cells(pdf: pd.DataFrame, cfg: SketchConfig) -> Sketch:
     )
 
 
-def finalize_cells(
-    cells: DataFrame,
-    qs: list[float],
-    by: list[str] | None = None,
-    cfg: SketchConfig | None = None,
-) -> DataFrame:
-    """Fused assemble+finalize: one Python stage from bucket cells straight to
-    ``by... | count sum min max avg | p...`` — the fewest stage barriers the
-    cells engine can have."""
-    by = list(by or [])
-    cfg = cfg or SketchConfig()
-    q_cols = [quantile_label(q) for q in qs]
-    schema = StructType(
-        _by_fields(cells, by)
-        + [
-            StructField("count", DoubleType()),
-            StructField("sum", DoubleType()),
-            StructField("min", DoubleType()),
-            StructField("max", DoubleType()),
-            StructField("avg", DoubleType()),
-        ]
-        + [StructField(c, DoubleType()) for c in q_cols]
-    )
-
-    def fin(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _sketch_from_cells(pdf, cfg)
-        rec = {col: pdf[col].iloc[0] for col in by}
-        rec.update(
-            count=sk.count, sum=sk.sum, min=sk.min, max=sk.max,
-            avg=sk.avg if sk.count else None,
-        )
-        for q, c in zip(qs, q_cols):
-            rec[c] = sk.quantile(q)
-        return pd.DataFrame([rec], columns=[f.name for f in schema.fields])
-
-    if by:
-        return cells.groupBy(*by).applyInPandas(fin, schema)
-    return (
-        cells.withColumn("_g", F.lit(0))
-        .groupBy("_g")
-        .applyInPandas(lambda pdf: fin(pdf.drop(columns=["_g"])), schema)
-    )
-
-
-def finalize_cells_vec(
-    cells: DataFrame,
-    qs: list[float],
-    by: list[str] | None = None,
-    cfg: SketchConfig | None = None,
-) -> DataFrame:
-    """Vectorized many-group finalizer: same output as :func:`finalize_cells`
-    but one NumPy pass per *partition* instead of one Python call per
-    *group* — the difference between O(groups) interpreter overhead and
-    O(cells) array math.  At 10^6 groups the per-group ``applyInPandas``
-    dispatch dominates the job; this path keeps wide-group rollups linear in
-    the cell count.
-
-    Groups are co-located with a hash repartition on the keys, then each
-    partition's cells are processed as flat arrays: segment boundaries via
-    ``groupby().ngroup()``, per-(group, sign) running counts via offset
-    cumsums, and the reference's three-branch rank walk
-    (``ddsketch/ddsketch.py:159-184``: negative reversed-rank ``lower=False``,
-    zero, positive) via ``minimum.reduceat`` first-hit scans.  Dense mode
-    only (collapsing clamps are per-store state — those groups use
-    :func:`finalize_cells`).
-    """
-    from .store import DENSE
-
-    by = list(by or [])
-    cfg = cfg or SketchConfig()
-    if cfg.mode != DENSE:
-        raise ValueError("finalize_cells_vec supports dense mode only")
-    mapping = cfg.key_mapping
-    q_list = [float(q) for q in qs]
-    q_cols = [quantile_label(q) for q in q_list]
-    # lean cells (build_cells(..., stats=False)) carry no _s/_mn/_mx —
-    # emit count + quantiles only, mirroring finalize_cells_sql's branch
-    has_stats = "_s" in cells.columns
-    stat_fields = (
-        [
-            StructField("count", DoubleType()),
-            StructField("sum", DoubleType()),
-            StructField("min", DoubleType()),
-            StructField("max", DoubleType()),
-            StructField("avg", DoubleType()),
-        ]
-        if has_stats
-        else [StructField("count", DoubleType())]
-    )
-    schema = StructType(
-        _by_fields(cells, by)
-        + stat_fields
-        + [StructField(c, DoubleType()) for c in q_cols]
-    )
-    out_cols = [f.name for f in schema.fields]
-
-    def fin(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-        n = len(pdf)
-        if n == 0:
-            return
-        if by:
-            gid = pdf.groupby(by, sort=False, dropna=False).ngroup().to_numpy()
-        else:
-            gid = np.zeros(n, dtype=np.int64)
-        sgn = pdf["_sgn"].to_numpy(np.int64)
-        k = pdf["_k"].to_numpy(np.int64)
-        c = pdf["_c"].to_numpy(np.float64)
-        order = np.lexsort((k, sgn, gid))
-        gid, sgn, k, c = gid[order], sgn[order], k[order], c[order]
-        if has_stats:
-            s = pdf["_s"].to_numpy(np.float64)[order]
-            mn = pdf["_mn"].to_numpy(np.float64)[order]
-            mx = pdf["_mx"].to_numpy(np.float64)[order]
-
-        g_start = np.flatnonzero(np.r_[True, gid[1:] != gid[:-1]])
-        n_groups = len(g_start)
-        g_of_row = np.repeat(np.arange(n_groups), np.diff(np.r_[g_start, n]))
-        count = np.add.reduceat(c, g_start)
-        if has_stats:
-            total_sum = np.add.reduceat(s, g_start)
-            g_min = np.minimum.reduceat(mn, g_start)
-            g_max = np.maximum.reduceat(mx, g_start)
-        neg_count = np.bincount(g_of_row, weights=c * (sgn == -1), minlength=n_groups)
-        zero_count = np.bincount(g_of_row, weights=c * (sgn == 0), minlength=n_groups)
-
-        # running count within each (group, sign) segment
-        seg_new = np.r_[True, (gid[1:] != gid[:-1]) | (sgn[1:] != sgn[:-1])]
-        seg_start = np.flatnonzero(seg_new)
-        cum_all = np.cumsum(c)
-        seg_base = np.repeat(
-            np.r_[0.0, cum_all[seg_start[1:] - 1]], np.diff(np.r_[seg_start, n])
-        )
-        cum = cum_all - seg_base
-
-        idx = np.arange(n)
-        BIG = n  # sentinel larger than any row index
-        is_neg = sgn == -1
-        is_pos = sgn == 1
-        # last row index of each group's neg/pos segment (fallback = max_key)
-        last_neg = np.full(n_groups, -1, dtype=np.int64)
-        np.maximum.at(last_neg, g_of_row[is_neg], idx[is_neg])
-        last_pos = np.full(n_groups, -1, dtype=np.int64)
-        np.maximum.at(last_pos, g_of_row[is_pos], idx[is_pos])
-
-        rec = {}
-        if by:
-            for col in by:
-                rec[col] = pdf[col].to_numpy()[order][g_start]
-        rec["count"] = count
-        if has_stats:
-            rec["sum"] = total_sum
-            rec["min"] = g_min
-            rec["max"] = g_max
-            rec["avg"] = np.where(
-                count > 0, total_sum / np.where(count > 0, count, 1.0), np.nan
-            )
-
-        for q, q_col in zip(q_list, q_cols):
-            rank = q * (count - 1.0)
-            rank_row = rank[g_of_row]
-            # negative branch: first neg row with cum >= neg_count - rank
-            neg_target = (neg_count - rank)[g_of_row]
-            hit = np.where(is_neg & (cum >= neg_target), idx, BIG)
-            first_neg = np.full(n_groups, BIG, dtype=np.int64)
-            np.minimum.at(first_neg, g_of_row[is_neg], hit[is_neg])
-            neg_idx = np.where(first_neg == BIG, last_neg, first_neg)
-            # positive branch: first pos row with cum > rank - zero - neg
-            pos_target = rank_row - (zero_count + neg_count)[g_of_row]
-            hit = np.where(is_pos & (cum > pos_target), idx, BIG)
-            first_pos = np.full(n_groups, BIG, dtype=np.int64)
-            np.minimum.at(first_pos, g_of_row[is_pos], hit[is_pos])
-            pos_idx = np.where(first_pos == BIG, last_pos, first_pos)
-
-            use_neg = rank < neg_count
-            use_zero = ~use_neg & (rank < zero_count + neg_count)
-            key_idx = np.where(use_neg, neg_idx, pos_idx)
-            safe_idx = np.clip(key_idx, 0, n - 1)
-            vals = mapping.value_vec(k[safe_idx])
-            out = np.where(use_neg, -vals, vals)
-            out = np.where(use_zero, 0.0, out)
-            rec[q_col] = out
-        yield pd.DataFrame(rec, columns=out_cols)
-
-    if by:
-        part = cells.repartition(*by)
-    else:
-        part = cells.coalesce(1)
-    return part.mapInPandas(fin, schema)
-
-
 def finalize_cells_sql(
     cells: DataFrame,
     qs: list[float],
@@ -626,9 +430,10 @@ def finalize_cells_sql(
     cfg: SketchConfig | None = None,
 ) -> DataFrame:
     """Pure-JVM finalizer: quantiles + exact stats from bucket cells with no
-    Python stage at all — the scale path for high group cardinality (at 10^6
-    groups it measures ~10x the Arrow/NumPy finalizer, because nothing
-    crosses the JVM boundary).
+    Python stage at all — the one distributed finalizer.  Every cells-engine
+    entry point (``quantile_sketch``, ``sql_quantile_sketch``, the streaming
+    ``finalize_cells_batch``, rollups) ends here, so group cardinality costs
+    only window + aggregate work, never interpreter dispatch.
 
     Correctness rests on an ordering identity with the reference's
     three-branch rank walk (``ddsketch/ddsketch.py:159-184``): order a

@@ -1,41 +1,44 @@
-"""DDSketch expressed purely in Spark SQL expressions — no Python in the hot
-path at all.
+"""DDSketch quantiles over positive values with no Python in the plan, and
+the same formula as ANSI SQL — the DuckDB oracle of the cells engine.
 
-For strictly positive values the whole sketch pipeline is a composition of
-relational operators, which keeps every stage inside Catalyst/Tungsten
-whole-stage codegen:
+:func:`sql_quantile_sketch` is the positive-values entry point of the cells
+engine (:mod:`ddspark.agg`): it keeps only ``v > 0`` and runs
+``build_cells(..., stats=False)`` + ``finalize_cells_sql``, so the row rules
+(NULL/NaN values and NULL weights dropped, non-positive weights rejected),
+the bucket key ``ceil(log2(v) * multiplier)`` (reference
+``ddsketch/mapping.py:75-83,107-109``), the collapsing clamp and the rank
+walk (first bucket whose running count exceeds ``q*(n-1)``,
+``ddsketch/store.py:234-242``) are the engine's own.  ``mode``/``bin_limit``
+collapse only when both are set.  Use :func:`ddspark.agg.quantile_sketch`
+when values can be negative or zero, when you need the exact
+min/max/sum side stats, or when sketch *state* must be persisted.
 
-* key assignment  — ``ceil(log2(v) * multiplier)``  (projection; the
-  reference's ``LogarithmicMapping.key``, ``ddsketch/mapping.py:75-83,107-109``)
-* bucket counting — ``groupBy(keys, k).count()``   (partial+final hash agg —
-  Spark's own map-side combine does what ``store.add`` does)
-* optional collapse — clamp ``k`` against the per-group max/min key
-  (``max(k) over (partition by g)``), re-aggregate (the clamped-counter
-  semantics of the collapsing stores, ``ddsketch/store.py:262-504``)
-* quantile        — running count over keys ordered by ``k``; the bucket at
-  rank ``q*(n-1)`` is the first with ``run > rank``
-  (``ddsketch/store.py:234-242``), finished by
-  ``pow(2, k/multiplier) * 2/(1+gamma)`` (``mapping.py:85-93``).
+:func:`ansi_sql_quantile_sketch` renders the key → count → clamp → window
+pipeline as portable SQL for DuckDB.  It differs from the Spark engines
+only on values in ``(0, min_possible]`` (~2.2e-308): the engines route them
+to the zero bucket, which reads back as 0.0 (the reference's rule,
+``ddsketch/ddsketch.py:144-149``), while the oracle keys them like any other
+positive value.  No gate table contains such a value.
 
-The same formula rendered as ANSI SQL is this engine's DuckDB oracle — see
-:func:`ansi_sql_quantile_sketch`.
-
-The window scan runs over *bucket counts*, not rows — after the groupBy the
-per-group row count is at most a few hundred buckets, so the window stage is
-negligible at any scale.  Use :mod:`ddspark.agg` when values can be negative
-or zero, when you need the exact min/max/sum side stats, or when sketch
-*state* must be persisted; use this path when the query is one-shot quantiles
-over positive values and you want zero Python overhead.
+:func:`sql_cdf_probe` (the inverse, rank queries) selects its rows through
+the same ``keyed_projection``; zero-bucket values count below every probe.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
+from .agg import (
+    _cached_cols,
+    build_cells,
+    finalize_cells_sql,
+    keyed_projection,
+    quantile_label,
+)
 from .mapping import LogarithmicMapping
+from .plancache import lookup, source_key, store
 from .sketch import SketchConfig
 from .store import COLLAPSE_HIGHEST, COLLAPSE_LOWEST
-from .agg import quantile_label
 
 __all__ = [
     "sql_quantile_sketch",
@@ -61,9 +64,6 @@ def sql_quantile_sketch(
     estimate within ``alpha`` relative error of the exact rank value.
     Weighted adds (fractional weights included) via ``weight_col``.
     """
-    from .agg import _cached_cols
-    from .plancache import lookup, source_key, store
-
     by = list(by or [])
 
     # plan memo: identical repeated invocations serve the memoized plan in
@@ -79,81 +79,14 @@ def sql_quantile_sketch(
         if hit is not None:
             return hit
 
-    def build():
-        mapping = LogarithmicMapping(alpha)
-        m = mapping._multiplier
-        gamma = mapping.gamma
-        k_col = F.ceil(F.log2(F.col(value_col)) * F.lit(m)).cast("long").alias("k")
-        # unweighted: sum of literal 1.0s == row count exactly, so count(*)
-        # is the cheaper bit-identical accumulator (no w column shipped)
-        c_agg = (F.sum("w") if weight_col else F.count(F.lit(1)).cast("double")).alias("c")
-        clamped = None
-        if mode in (COLLAPSE_LOWEST, COLLAPSE_HIGHEST) and bin_limit:
-            wg = Window.partitionBy(*by) if by else Window.partitionBy(F.lit(0))
-            if mode == COLLAPSE_LOWEST:
-                clamped = F.greatest(
-                    F.col("k"), F.max("k").over(wg) - F.lit(bin_limit - 1)
-                )
-            else:
-                clamped = F.least(
-                    F.col("k"), F.min("k").over(wg) + F.lit(bin_limit - 1)
-                )
-        w_cum = (
-            (Window.partitionBy(*by) if by else Window.partitionBy(F.lit(0)))
-            .orderBy("k")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        w_all = Window.partitionBy(*by) if by else Window.partitionBy(F.lit(0))
-        run_col = F.sum("c").over(w_cum)
-        n_col = F.sum("c").over(w_all)
-        aggs = [F.max("n").alias("count")]
-        for q in qs:
-            rank = F.lit(q) * (F.col("n") - 1)
-            key_q = F.min(F.when(F.col("run") > rank, F.col("k")))
-            value_q = F.pow(F.lit(2.0), key_q.cast("double") / F.lit(m)) * F.lit(
-                2.0 / (1.0 + gamma)
-            )
-            aggs.append(value_q.alias(quantile_label(q)))
-        return k_col, c_agg, clamped, run_col, n_col, tuple(aggs)
-
-    k_col, c_agg, clamped, run_col, n_col, aggs = _cached_cols(
-        (
-            "sqlpath",
-            float(alpha),
-            value_col,
-            tuple(by),
-            tuple(float(q) for q in qs),
-            mode,
-            bin_limit,
-            weight_col,
-        ),
-        build,
-    )
-    w = F.col(weight_col).cast("double") if weight_col else None
-    if weight_col:
-        # fail fast on non-positive weights, matching the kernel engine and
-        # the reference's ValueError (ddsketch/ddsketch.py:141-142)
-        w = F.when(w > 0, w).otherwise(
-            F.raise_error(
-                F.concat(F.lit("weight must be positive, got "), w.cast("string"))
-            )
-        )
-    keyed = df.where(F.col(value_col) > 0).select(
-        *by,
-        k_col,
-        *([w.alias("w")] if weight_col else []),
-    )
-    counts = keyed.groupBy(*by, "k").agg(c_agg)
-    if clamped is not None:
-        counts = (
-            counts.withColumn("k", clamped)
-            .groupBy(*by, "k")
-            .agg(F.sum("c").alias("c"))
-        )
-    # single withColumns: one eager JVM analysis instead of two
-    cum = counts.withColumns({"run": run_col, "n": n_col})
-    grouped = cum.groupBy(*by) if by else cum.groupBy()
-    return store(memo_key, grouped.agg(*aggs))
+    # mode/bin_limit collapse only when both are set, as they always have
+    if mode in (COLLAPSE_LOWEST, COLLAPSE_HIGHEST) and bin_limit:
+        cfg = SketchConfig(alpha, mode=mode, bin_limit=bin_limit)
+    else:
+        cfg = SketchConfig(alpha)
+    positive = _cached_cols(("sqlpath_pos", value_col), lambda: F.col(value_col) > 0)
+    cells = build_cells(df.where(positive), value_col, by, cfg, weight_col, stats=False)
+    return store(memo_key, finalize_cells_sql(cells, list(qs), by, cfg))
 
 
 def _ansi_key_sql(mapping_name: str, mapping) -> tuple[str, str]:
@@ -354,22 +287,24 @@ def sql_cdf_probe(
     probe explode over the tiny per-group result.
     """
     by = list(by or [])
-    m, gamma, keys = _probe_keys(xs, alpha)
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    base = df.where(F.col(value_col) > 0).select(
-        *by,
-        F.col(value_col).cast("double").alias("v"),
-        w.alias("w"),
-        F.ceil(F.log2(F.col(value_col)) * F.lit(m)).cast("long").alias("k"),
+    _, gamma, keys = _probe_keys(xs, alpha)
+    # the cells engine's projection owns the row rules: NULL/NaN values and
+    # NULL weights dropped, non-positive weights rejected; values at or
+    # below min_possible land in the zero bucket (_sgn = 0), below every probe
+    base = keyed_projection(
+        df.where(F.col(value_col) > 0), value_col, by, SketchConfig(alpha), weight_col
     )
-    aggs = [F.sum("w").alias("_n")]
+    aggs = [F.sum("_w").alias("_n")]
     for i, (x, kx) in enumerate(zip(xs, keys)):
-        aggs.append(F.sum(F.when(F.col("k") <= kx, F.col("w"))).alias(f"_e{i}"))
         aggs.append(
-            F.sum(F.when(F.col("v") <= float(x) / gamma, F.col("w"))).alias(f"_lo{i}")
+            F.sum(F.when((F.col("_sgn") == 0) | (F.col("_k") <= kx), F.col("_w")))
+            .alias(f"_e{i}")
         )
         aggs.append(
-            F.sum(F.when(F.col("v") <= float(x) * gamma, F.col("w"))).alias(f"_hi{i}")
+            F.sum(F.when(F.col("_v") <= float(x) / gamma, F.col("_w"))).alias(f"_lo{i}")
+        )
+        aggs.append(
+            F.sum(F.when(F.col("_v") <= float(x) * gamma, F.col("_w"))).alias(f"_hi{i}")
         )
     grouped = (base.groupBy(*by) if by else base.groupBy()).agg(*aggs)
     probes = F.array(

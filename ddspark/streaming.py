@@ -681,11 +681,14 @@ def finalize_cells_batch(
     cfg: SketchConfig | None = None,
 ) -> DataFrame:
     """Batch finalizer for the windowed cells (use inside ``foreachBatch``):
-    assembles per-(window, keys) quantiles from the emitted cells."""
-    from .agg import finalize_cells
+    per-(window, keys) ``count sum min max avg | p...`` from the emitted
+    cells, through the engine's one distributed finalizer."""
+    from .agg import finalize_cells_sql
 
     cfg = cfg or SketchConfig()
-    return finalize_cells(cells_batch, list(qs), ["win"] + list(by), cfg)
+    fin = finalize_cells_sql(cells_batch, list(qs), ["win"] + list(by), cfg)
+    # the cells keep the value column's type in _mn/_mx; min/max are DOUBLE
+    return fin.withColumns({c: F.col(c).cast("double") for c in ("min", "max")})
 
 
 def _state_versions(state_dir: str) -> list[tuple[int, str]]:

@@ -239,57 +239,13 @@ def test_driver_finalize_equals_distributed(spark, mixed_df):
     )
 
 
-# -------------------------------------------------- vectorized finalizer
+# ------------------------------------------------------ distributed finalizer
 
 
-def test_finalize_cells_vec_matches_per_group(spark, mixed_df):
-    """The O(cells) vectorized finalizer must reproduce the per-group
-    applyInPandas finalizer exactly (same keys -> same values; exact stats
-    are integer-valued sums here)."""
-    from ddspark.agg import build_cells, finalize_cells, finalize_cells_vec
-
-    df, _ = mixed_df
-    cfg = SketchConfig(ALPHA)
-    cells = build_cells(df, "v", ["g"], cfg)
-    a = (
-        finalize_cells(cells, QS, ["g"], cfg)
-        .toPandas().sort_values("g").reset_index(drop=True)
-    )
-    b = (
-        finalize_cells_vec(cells, QS, ["g"], cfg)
-        .toPandas().sort_values("g").reset_index(drop=True)
-    )
-    assert list(a.columns) == list(b.columns)
-    for col in a.columns:
-        if col == "g":
-            assert (a[col] == b[col]).all()
-        else:
-            assert np.allclose(
-                a[col].to_numpy(np.float64), b[col].to_numpy(np.float64),
-                rtol=0, atol=0, equal_nan=True,
-            ), col
-
-
-def test_finalize_cells_vec_global_and_extreme_qs(spark, mixed_df):
-    from ddspark.agg import build_cells, finalize_cells, finalize_cells_vec
-
-    df, _ = mixed_df
-    cfg = SketchConfig(0.02)
-    qs = [0.0, 0.01, 0.5, 0.99, 1.0]
-    cells = build_cells(df, "v", None, cfg)
-    a = finalize_cells(cells, qs, None, cfg).drop("_g").toPandas()
-    b = finalize_cells_vec(cells, qs, None, cfg).toPandas()
-    for col in b.columns:
-        assert np.allclose(
-            a[col].to_numpy(np.float64), b[col].to_numpy(np.float64),
-            rtol=0, atol=0, equal_nan=True,
-        ), col
-
-
-def test_finalize_cells_vec_many_groups(spark):
-    """Correctness at high group cardinality (the scale case the vectorized
-    path exists for): spot-check groups against the local algebra."""
-    from ddspark.agg import build_cells, finalize_cells_vec
+def test_finalize_cells_sql_many_groups(spark):
+    """Correctness at high group cardinality: spot-check groups against the
+    local algebra."""
+    from ddspark.agg import build_cells, finalize_cells_sql
 
     rng = np.random.default_rng(11)
     n = 60_000
@@ -299,7 +255,7 @@ def test_finalize_cells_vec_many_groups(spark):
     pdf = pd.DataFrame({"g": g, "v": v})
     df = spark.createDataFrame(pdf).repartition(16)
     cfg = SketchConfig(ALPHA)
-    res = finalize_cells_vec(
+    res = finalize_cells_sql(
         build_cells(df, "v", ["g"], cfg), QS, ["g"], cfg
     ).toPandas().set_index("g")
     assert len(res) == pdf["g"].nunique()
@@ -310,15 +266,19 @@ def test_finalize_cells_vec_many_groups(spark):
         assert row["count"] == len(vals)
         assert row["min"] == vals.min() and row["max"] == vals.max()
         for q in QS:
-            assert row[quantile_label(q)] == sk.quantile(q), (gid, q)
+            # same bucket; JVM pow vs np.power may differ in the last ulp
+            assert row[quantile_label(q)] == pytest.approx(
+                sk.quantile(q), rel=1e-12
+            ), (gid, q)
 
 
 def test_finalize_cells_sql_matches_python_all_modes(spark, mixed_df):
-    """The pure-JVM finalizer must agree with the per-group Python finalizer
-    (the Sketch algebra) on mixed-sign data in every store mode — this is
-    the property that licenses the ordering identity documented on
-    finalize_cells_sql."""
-    from ddspark.agg import build_cells, finalize_cells, finalize_cells_sql
+    """The pure-JVM finalizer must agree with the driver-side Sketch algebra
+    over the same cells (``_sketch_from_cells`` + ``Sketch.quantile``, as
+    ``quantile_sketch_collect`` does) on mixed-sign data in every store
+    mode — this is the property that licenses the ordering identity
+    documented on finalize_cells_sql."""
+    from ddspark.agg import _sketch_from_cells, build_cells, finalize_cells_sql
 
     df, _ = mixed_df
     for cfg in [
@@ -327,23 +287,18 @@ def test_finalize_cells_sql_matches_python_all_modes(spark, mixed_df):
         SketchConfig(0.05, mode=COLLAPSE_HIGHEST, bin_limit=16),
     ]:
         cells = build_cells(df, "v", ["g"], cfg)
-        a = (
-            finalize_cells(cells, QS, ["g"], cfg)
-            .toPandas().sort_values("g").reset_index(drop=True)
-        )
-        b = (
-            finalize_cells_sql(cells, QS, ["g"], cfg)
-            .toPandas().sort_values("g").reset_index(drop=True)
-        )
-        for col in ["count", "sum", "min", "max"]:
-            assert (a[col].to_numpy() == b[col].to_numpy()).all(), (cfg.mode, col)
-        for q in QS:
-            col = quantile_label(q)
-            # np.power vs JVM pow may differ in the last ulp
-            assert np.allclose(
-                a[col].to_numpy(np.float64), b[col].to_numpy(np.float64),
-                rtol=1e-12,
-            ), (cfg.mode, col)
+        local = {g: _sketch_from_cells(c, cfg) for g, c in cells.toPandas().groupby("g")}
+        res = finalize_cells_sql(cells, QS, ["g"], cfg).toPandas()
+        assert sorted(res["g"]) == sorted(local)
+        for row in res.to_dict("records"):
+            sk = local[row["g"]]
+            for col in ["count", "sum", "min", "max"]:
+                assert row[col] == getattr(sk, col), (cfg.mode, row["g"], col)
+            for q in QS:
+                # np.power vs JVM pow may differ in the last ulp
+                assert row[quantile_label(q)] == pytest.approx(
+                    sk.quantile(q), rel=1e-12
+                ), (cfg.mode, row["g"], q)
 
 
 def test_finalize_cells_sql_negative_heavy_quantiles(spark):
@@ -389,31 +344,6 @@ def test_quantile_sketch_exact_stats_false(spark, mixed_df):
     assert (full["count"].sort_index() == lean["count"].sort_index()).all()
     cells = build_cells(df, "v", ["g"], cfg, stats=False)
     assert set(cells.columns) == {"g", "_sgn", "_k", "_c", "_rc"}
-
-
-def test_finalize_cells_vec_lean_cells(spark):
-    """Regression: the vectorized finalizer must accept the quantiles-only
-    cell shape (stats=False) and agree with the SQL finalizer."""
-    import numpy as np
-
-    from ddspark.agg import build_cells, finalize_cells_sql, finalize_cells_vec
-    from ddspark.sketch import SketchConfig
-
-    rng = np.random.default_rng(3)
-    vals = np.abs(rng.lognormal(2.0, 1.0, 4000)) + 0.5
-    df = spark.createDataFrame(
-        [(("a" if i % 3 else "b"), float(v)) for i, v in enumerate(vals)],
-        "g string, v double",
-    )
-    cfg = SketchConfig(0.02)
-    lean = build_cells(df, "v", ["g"], cfg, stats=False)
-    vec = finalize_cells_vec(lean, [0.5, 0.95], ["g"], cfg).toPandas()
-    sql = finalize_cells_sql(lean, [0.5, 0.95], ["g"], cfg).toPandas()
-    assert "sum" not in vec.columns
-    key = lambda d: sorted(
-        map(tuple, d[sorted(d.columns)].round(9).itertuples(index=False))
-    )
-    assert key(vec) == key(sql[sorted(vec.columns)])
 
 
 # ------------------------------------------------ rolling trailing windows

@@ -13,7 +13,7 @@ import pytest
 from ddspark.agg import quantile_label, quantile_sketch
 from ddspark.datasets import exact_quantile
 from ddspark.mapping import LogarithmicMapping
-from ddspark.sketch import SketchConfig
+from ddspark.sketch import Sketch, SketchConfig
 from ddspark.sqlpath import ansi_sql_quantile_sketch, sql_quantile_sketch
 from ddspark.store import COLLAPSE_LOWEST
 
@@ -195,3 +195,76 @@ def test_cdf_probe_matches_duckdb(spark):
         map(tuple, con.execute(ansi_sql_cdf_probe("t", "v", xs, by=["g"])).fetchall())
     )
     assert got == duck
+
+
+def test_sql_path_drops_nan_and_null_weight_rows(spark):
+    """NaN values and NULL weights are dropped exactly as the cells engine
+    drops them (Spark orders NaN above every number, so ``v > 0`` alone
+    would keep it): the answer is quantile_sketch's over ``v > 0``."""
+    nan = float("nan")
+    # built from tuples: pandas input would turn NaN into NULL on the way in
+    df = spark.createDataFrame(
+        [
+            ("a", 10.0, 1.0), ("a", 20.0, 2.0), ("a", nan, 1.0),
+            ("a", nan, 1.0), ("a", nan, None),
+            ("b", 3.0, None), ("b", 7.0, 0.5), ("b", -1.0, 1.0),
+        ],
+        "g string, v double, w double",
+    )
+    cfg = SketchConfig(ALPHA)
+    positive = df.where(df["v"] > 0)
+    rows = lambda d: sorted(d.toPandas().to_dict("records"), key=lambda r: r["g"])
+    for weight_col in (None, "w"):
+        got = sql_quantile_sketch(df, "v", ["g"], QS, ALPHA, weight_col=weight_col)
+        want = quantile_sketch(
+            positive, "v", ["g"], QS, cfg, weight_col=weight_col, exact_stats=False
+        )
+        assert got.columns == want.columns
+        assert rows(got) == rows(want)
+    a = sql_quantile_sketch(df.where(df["g"] == "a"), "v", None, [0.5], ALPHA).first()
+    assert a["count"] == 2 and abs(a["p50"] - 10.0) <= ALPHA * 10.0
+
+
+def test_sql_path_zero_bucket_edge(spark):
+    """Positive values at or below the mapping's min_possible go to the zero
+    bucket and read back as 0.0 — the reference's rule
+    (ddsketch/ddsketch.py:144-149), shared by all three engines."""
+    vals = [1e-310, 2e-310, 3e-310]
+    df = spark.createDataFrame(pd.DataFrame({"v": vals}))
+    cfg = SketchConfig(ALPHA)
+    sql = sql_quantile_sketch(df, "v", None, [0.5], ALPHA).first()
+    cells = quantile_sketch(df, "v", None, [0.5], cfg).first()
+    local = Sketch.from_values(np.array(vals), cfg)
+    assert sql["count"] == cells["count"] == local.count == 3
+    assert sql["p50"] == cells["p50"] == local.quantile(0.5) == 0.0
+
+
+def test_cdf_probe_drops_nan_rows(spark):
+    from ddspark.sqlpath import sql_cdf_probe
+
+    nan = float("nan")
+    df = spark.createDataFrame([(0.5,), (4.0,), (nan,), (nan,)], "v double")
+    (row,) = sql_cdf_probe(df, "v", [2.0]).collect()
+    assert row["est_cdf"] == 0.5 and row["within_bracket"]
+
+
+def test_cdf_probe_counts_zero_bucket_below_every_probe(spark):
+    from ddspark.sqlpath import sql_cdf_probe
+
+    df = spark.createDataFrame(pd.DataFrame({"v": [1e-310, 4.0, 8.0, 16.0]}))
+    rows = sql_cdf_probe(df, "v", [1e-300, 5.0]).collect()
+    assert [r["est_cdf"] for r in rows] == [0.25, 0.5]
+    assert all(r["within_bracket"] for r in rows)
+
+
+def test_cdf_probe_rejects_nonpositive_weight(spark):
+    from ddspark.sqlpath import sql_cdf_probe
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"v": [1.0, 3.0, 5.0], "w": [1.0, -2.0, None]})
+    )
+    with pytest.raises(Exception, match="weight must be positive"):
+        sql_cdf_probe(df, "v", [2.0], weight_col="w").collect()
+    ok = df.where(df["w"].isNull() | (df["w"] > 0))
+    (row,) = sql_cdf_probe(ok, "v", [2.0], weight_col="w").collect()
+    assert row["est_cdf"] == 1.0

@@ -116,6 +116,26 @@ def test_windowed_cells_stream(spark, tmp_path, stream_rows):
         assert abs(rec[quantile_label(0.95)] - exact) <= 0.02 * abs(exact) + 1e-15
 
 
+def test_finalize_cells_batch_output_types(spark):
+    """Integer value columns keep the batch finalizer's DOUBLE stat and
+    quantile columns (the cells carry the value type in _mn/_mx)."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [(t0 + dt.timedelta(minutes=i), "a", 3 + i) for i in range(5)],
+        "ts timestamp, g string, v long",
+    )
+    cells = windowed_sketch_cells(df, "ts", "v", ["g"], "1 hour", "2 hours", CFG)
+    fin = finalize_cells_batch(cells, [0.5], ["g"], CFG)
+    assert fin.columns == ["win", "g", "count", "sum", "min", "max", "avg", "p50"]
+    assert {c: t for c, t in fin.dtypes if c not in ("win", "g")} == dict.fromkeys(
+        fin.columns[2:], "double"
+    )
+    (row,) = fin.collect()
+    assert (row["count"], row["min"], row["max"]) == (5.0, 3.0, 7.0)
+
+
 def test_sessionize_islands(spark):
     """Session assignment: maximal runs with gaps < gap; boundary at
     exactly gap starts a new session (session_window parity)."""
@@ -642,8 +662,9 @@ def test_windowed_cells_equal_batch_replay_across_batches(spark, tmp_path):
             assert g[field] == w[field], (k, field, g[field], w[field])
         # float sum order differs between streaming-state merge and batch agg
         assert g["sum"] == pytest.approx(w["sum"], rel=1e-12)
-    # and the independent JVM rank-walk finalizer (quantile_sketch) agrees
-    # to float round-off — ties the two finalizer implementations together
+    # and quantile_sketch over the same windowed rows agrees — the same
+    # finalizer, reached through the flagship entry point's cells instead
+    # of the stream's
     qs_d = {
         key(r): r
         for r in quantile_sketch(batch_win, "v", ["win", "g"], [0.5, 0.95], CFG)
