@@ -1,6 +1,11 @@
-"""Store kernel tests: bin-level equality against the reference stores and
-against the clamped-Counter oracle, over the reference's stream matrix
-(``/root/reference/tests/test_store.py``)."""
+"""Store kernel tests over the reference's stream matrix (sketches-py
+``tests/test_store.py``).
+
+Every host checks bins against the clamped-``Counter`` oracle of the
+reference's own tests, and ``key_at_rank`` against the contract documented in
+``ddspark/store.py``.  The bin-level and rank comparisons with the reference
+stores themselves run only where the sketches-py checkout (``REFERENCE_ROOT``
+in ``conftest.py``) or an installed ``ddsketch`` can be imported."""
 
 from __future__ import annotations
 
@@ -69,7 +74,7 @@ def oracle(keys, mode, bin_limit) -> dict[int, float]:
     return {k: float(v) for k, v in out.items()}
 
 
-def ref_store(ref, mode, bin_limit):
+def ref_store(mode, bin_limit):
     from ddsketch.store import (
         CollapsingHighestDenseStore,
         CollapsingLowestDenseStore,
@@ -90,30 +95,32 @@ def ref_store_dict(store) -> dict[int, float]:
 
 
 @pytest.mark.parametrize("stream", list(STREAMS))
-def test_dense_matches_reference(ref, stream):
+def test_dense_matches_reference(optional_ref, stream):
     keys = STREAMS[stream]
     ours = bins_from_keys(np.array(keys, dtype=np.int64), mode=DENSE)
-    theirs = ref_store(ref, DENSE, None)
-    for k in keys:
-        theirs.add(k)
-    assert store_to_dict(*ours) == ref_store_dict(theirs)
     assert store_to_dict(*ours) == oracle(keys, DENSE, None)
+    if optional_ref is not None:
+        theirs = ref_store(DENSE, None)
+        for k in keys:
+            theirs.add(k)
+        assert store_to_dict(*ours) == ref_store_dict(theirs)
 
 
 @pytest.mark.parametrize("mode", [COLLAPSE_LOWEST, COLLAPSE_HIGHEST])
 @pytest.mark.parametrize("bin_limit", BIN_LIMITS)
 @pytest.mark.parametrize("stream", list(STREAMS) + list(EXTREME_STREAMS))
-def test_collapsing_matches_reference_and_oracle(ref, mode, bin_limit, stream):
+def test_collapsing_matches_reference_and_oracle(optional_ref, mode, bin_limit, stream):
     keys = {**STREAMS, **EXTREME_STREAMS}[stream]
     ours = bins_from_keys(
         np.array(keys, dtype=np.int64), mode=mode, bin_limit=bin_limit
     )
-    theirs = ref_store(ref, mode, bin_limit)
-    for k in keys:
-        theirs.add(k)
     expected = oracle(keys, mode, bin_limit)
     assert store_to_dict(*ours) == expected
-    assert ref_store_dict(theirs) == expected  # sanity: oracle == reference
+    if optional_ref is not None:
+        theirs = ref_store(mode, bin_limit)
+        for k in keys:
+            theirs.add(k)
+        assert ref_store_dict(theirs) == expected  # sanity: oracle == reference
 
 
 @pytest.mark.parametrize("mode", [DENSE, COLLAPSE_LOWEST, COLLAPSE_HIGHEST])
@@ -164,21 +171,34 @@ def test_weighted_bins():
     assert store_to_dict(off, bins) == {5: 2.0, 7: 2.0, -2: 0.25}
 
 
-def test_key_at_rank_contract(ref):
-    """Decimal-rank and lower-flag semantics vs the reference
-    (store.py:90-103, tests/test_store.py:171-188)."""
-    from ddsketch.store import DenseStore
+def test_key_at_rank_contract(optional_ref):
+    """Decimal-rank and lower-flag semantics: the contract of
+    ``ddspark/store.py:key_at_rank`` (reference store.py:90-103,
+    tests/test_store.py:171-188), and the reference where present.
 
+    Running counts are [3, 5, 6] over keys [0, 1, 2].  With ``lower`` the
+    answer is the first key whose running count exceeds ``rank``; otherwise
+    the first key whose running count reaches ``rank + 1``; past the total
+    count, ``max_key``."""
     keys = [0, 0, 0, 1, 1, 2]
-    theirs = DenseStore()
-    for k in keys:
-        theirs.add(k)
+    ranks = [0, 0.5, 1, 2, 2.5, 3, 4, 4.5, 5, 6, 10]
+    expected = {
+        True: [0, 0, 0, 0, 0, 1, 1, 1, 2, 2, 2],
+        False: [0, 0, 0, 0, 1, 1, 1, 2, 2, 2, 2],
+    }
     ours = bins_from_keys(np.array(keys, dtype=np.int64))
-    for rank in [0, 0.5, 1, 2, 2.5, 3, 4, 4.5, 5, 6, 10]:
-        for lower in (True, False):
-            assert key_at_rank(ours, rank, lower) == theirs.key_at_rank(
-                rank, lower
-            ), (rank, lower)
+    for lower in (True, False):
+        got = [key_at_rank(ours, rank, lower) for rank in ranks]
+        assert got == expected[lower], lower
+    if optional_ref is not None:
+        theirs = ref_store(DENSE, None)
+        for k in keys:
+            theirs.add(k)
+        for rank in ranks:
+            for lower in (True, False):
+                assert key_at_rank(ours, rank, lower) == theirs.key_at_rank(
+                    rank, lower
+                ), (rank, lower)
 
 
 def test_canonicalize_trims():
