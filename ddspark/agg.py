@@ -15,9 +15,11 @@ custom partial-merging UDAF:
    the associative store merge (reference ``ddsketch.py:186-215``), with an
    optional intermediate tree level (``fanin``) for very high partition
    counts.
-3. **finalize** — :func:`finalize_quantiles`: per merged row, cumsum /
-   searchsorted quantile extraction (reference ``ddsketch.py:159-184``),
-   plus the exact count/sum/min/max/avg the sketch tracks.
+3. **finalize** — :func:`finalize_quantiles`: each merged row becomes
+   bucket cells inside the JVM (one ``inline`` of its bins) and runs
+   through :func:`finalize_cells_sql`, the same Catalyst rank walk
+   (reference ``ddsketch.py:159-184``) and exact count/sum/min/max/avg the
+   cells engine ends in — no Python stage.
 
 The flagship entry point is :func:`quantile_sketch`.
 """
@@ -727,57 +729,46 @@ def quantile_label(q: float) -> str:
     return f"p{s}"
 
 
+def _state_cells(merged: DataFrame, by: list[str]) -> DataFrame:
+    """Sketch-state rows as bucket cells ``by... _sgn _k _c _s _mn _mx``,
+    all in the JVM: one zero cell ``(0, 0, zero_count)`` carrying the row's
+    exact sum/min/max, then one cell per non-zero bin.  A zero-count zero
+    cell sits after every negative cell, so it satisfies ``run > rank`` only
+    when an earlier, smaller cell already does: the rank walk never picks it.
+    """
+
+    def build():
+        def cell(sgn, k, c, s, mn, mx):
+            return F.struct(
+                F.lit(sgn).alias("_sgn"), k.cast("long").alias("_k"), c.alias("_c"),
+                s.alias("_s"), mn.alias("_mn"), mx.alias("_mx"),
+            )
+
+        def bins(sgn: int, side: str):
+            none = F.lit(None).cast("double")
+            cells = F.transform(f"{side}_bins", lambda c, i: cell(
+                sgn, F.col(f"{side}_offset") + i, c, F.lit(0.0), none, none))
+            return F.filter(cells, lambda x: x["_c"] != 0)
+
+        zero = cell(0, F.lit(0), F.col("zero_count"), F.col("sum"), F.col("min"), F.col("max"))
+        return F.inline(F.concat(F.array(zero), bins(-1, "neg"), bins(1, "pos")))
+
+    return merged.select(*by, _cached_cols(("state_cells",), build))
+
+
 def finalize_quantiles(
     merged: DataFrame,
     qs: list[float],
     cfg: SketchConfig | None = None,
     by: list[str] | None = None,
-    keep_state: bool = False,
 ) -> DataFrame:
-    """Quantile extraction + exact stats from merged sketch rows.
+    """Quantile extraction + exact stats from merged sketch-state rows, by
+    :func:`finalize_cells_sql` over the rows' cells.
 
-    Output: ``by... | count sum min max avg | p50 p95 ... [| state...]``.
+    Output: ``by... | count sum min max avg | p50 p95 ...``.
     """
     by = list(by or [])
-    cfg = cfg or SketchConfig()
-    q_cols = [quantile_label(q) for q in qs]
-    fields = (
-        _by_fields(merged, by)
-        + [
-            StructField("count", DoubleType()),
-            StructField("sum", DoubleType()),
-            StructField("min", DoubleType()),
-            StructField("max", DoubleType()),
-            StructField("avg", DoubleType()),
-        ]
-        + [StructField(c, DoubleType()) for c in q_cols]
-    )
-    if keep_state:
-        fields += STATE_FIELDS
-    schema = StructType(fields)
-
-    def fin(batches):
-        for pdf in batches:
-            out = []
-            for rec in pdf.to_dict("records"):
-                sk = Sketch.from_state(cfg, rec)
-                row = {c: rec[c] for c in by}
-                row.update(
-                    count=sk.count,
-                    sum=sk.sum,
-                    min=sk.min,
-                    max=sk.max,
-                    avg=sk.avg if sk.count else None,
-                )
-                for q, c in zip(qs, q_cols):
-                    row[c] = sk.quantile(q)
-                if keep_state:
-                    row.update(_state_dict(sk))
-                out.append(row)
-            if out:
-                yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
-
-    return merged.mapInPandas(fin, schema)
+    return finalize_cells_sql(_state_cells(merged, by), list(qs), by, cfg)
 
 
 def sketch_agg(
@@ -793,23 +784,17 @@ def sketch_agg(
 
     Engines:
 
-    * ``cells`` (default for the logarithmic mapping) — bucket keys and the
-      heavy aggregation run entirely JVM-side (whole-stage codegen, map-side
-      combine); Python assembles one state row per group from its bucket
-      cells.  Fastest and most scalable: no raw row crosses the JVM/Python
-      boundary.
+    * ``cells`` (the default) — bucket keys and the heavy aggregation run
+      entirely JVM-side (whole-stage codegen, map-side combine); Python
+      assembles one state row per group from its bucket cells
+      (:func:`assemble_cells`).  No raw row crosses the JVM/Python boundary.
     * ``kernel`` — Arrow-batch NumPy kernels per partition (mapInPandas) +
-      associative applyInPandas merge.  Required for interpolated mappings
-      and when per-partition partials/lineage are needed (checkpointing).
+      associative applyInPandas merge; keeps the per-partition partials
+      and lineage that checkpointing needs.
     """
     by = list(by or [])
     cfg = cfg or SketchConfig()
-    if engine == "auto":
-        # every mapping now has Catalyst key/value forms, so the JVM cells
-        # engine is always the default; "kernel" remains for lineage/
-        # checkpoint workflows and as the independent Arrow cross-check
-        engine = "cells"
-    if engine == "cells":
+    if engine in ("auto", "cells"):
         return assemble_cells(build_cells(df, value_col, by, cfg, weight_col), by, cfg)
     partials = build_partials(df, value_col, by, cfg, weight_col)
     return merge_partials(partials, by, cfg, fanin=fanin)
@@ -823,7 +808,6 @@ def quantile_sketch(
     cfg: SketchConfig | None = None,
     weight_col: str | None = None,
     fanin: int | None = None,
-    keep_state: bool = False,
     engine: str = "auto",
     exact_stats: bool = True,
 ) -> DataFrame:
@@ -834,6 +818,12 @@ def quantile_sketch(
     DDSketch quantile estimates, each within ``cfg.relative_accuracy`` of the
     exact rank value.
 
+    ``engine="cells"`` (the default) runs with no Python stage at all;
+    ``engine="kernel"`` builds and merges sketch states with NumPy kernels
+    (two Python stages, :func:`sketch_agg`) and finalizes them in the JVM
+    through :func:`finalize_quantiles`.  Both end in
+    :func:`finalize_cells_sql`.
+
     ``exact_stats=False`` (cells engine only) omits sum/min/max/avg and
     halves the per-cell state — the lean shape for quantiles-only jobs at
     very high group cardinality.
@@ -842,11 +832,7 @@ def quantile_sketch(
 
     by = list(by or [])
     cfg = cfg or SketchConfig()
-    if engine == "auto":
-        # every mapping now has Catalyst key/value forms, so the JVM cells
-        # engine is always the default; "kernel" remains for lineage/
-        # checkpoint workflows and as the independent Arrow cross-check
-        engine = "cells"
+    engine = "cells" if engine == "auto" else engine
     # plan memo (ddspark.plancache): repeated invocations over the same
     # file-backed input rebuild an IDENTICAL logical plan — serve the
     # memoized plan in a fresh Dataset instead of paying ~100 ms of py4j +
@@ -858,12 +844,12 @@ def quantile_sketch(
             "quantile_sketch", value_col, tuple(by),
             tuple(float(q) for q in qs),
             cfg.relative_accuracy, cfg.mapping, cfg.mode, cfg.bin_limit,
-            cfg.offset, weight_col, fanin, keep_state, engine, exact_stats,
+            cfg.offset, weight_col, fanin, engine, exact_stats,
         )
         hit = lookup(key, df.sparkSession)
         if hit is not None:
             return hit
-    if engine == "cells" and not keep_state:
+    if engine == "cells":
         # fully-fused JVM path: key expressions, partial aggregation AND the
         # quantile finalizer all run inside Catalyst/Tungsten — zero Python
         # stages, so group cardinality only costs window+agg work, never
@@ -871,10 +857,7 @@ def quantile_sketch(
         cells = build_cells(df, value_col, by, cfg, weight_col, stats=exact_stats)
         return store(key, finalize_cells_sql(cells, list(qs), by, cfg))
     merged = sketch_agg(df, value_col, by, cfg, weight_col, fanin=fanin, engine=engine)
-    out = finalize_quantiles(merged, list(qs), cfg, by, keep_state=keep_state)
-    return store(
-        key, out.drop("_g") if not by and "_g" in out.columns else out
-    )
+    return store(key, finalize_quantiles(merged, list(qs), cfg, by))
 
 
 def quantile_sketch_multi(

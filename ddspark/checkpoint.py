@@ -169,5 +169,4 @@ def checkpointed_quantile_sketch(
     merged = checkpointed_sketch_agg(
         spark, input_path, value_expr, by, cfg, ckpt_dir, weight_col, max_files
     )
-    out = finalize_quantiles(merged, list(qs), cfg, by)
-    return out.drop("_g") if not by and "_g" in out.columns else out
+    return finalize_quantiles(merged, list(qs), cfg, by)

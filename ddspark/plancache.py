@@ -24,10 +24,12 @@ Key design — a cache hit must be *provably* the same computation:
 * ``canonicalized().toString()`` of the analyzed input plan normalizes
   expression ids and commutative comparisons, but it ELIDES file paths and
   ``LocalRelation`` data, so it is never sufficient alone.  The key
-  therefore also carries the exact ``df.inputFiles()`` list, and frames
-  with an empty file list (in-memory relations, RDD-backed frames) or a
-  streaming source are never memoized — their identity cannot be
-  established cheaply, so they always rebuild.
+  therefore also carries the exact ``df.inputFiles()`` list, and only
+  frames whose EVERY leaf is a file scan (``LogicalRelation`` over a
+  ``HadoopFsRelation``) are memoized.  A frame with any other leaf — an
+  in-memory or RDD-backed relation, even one joined to files — or a
+  streaming source always rebuilds: its identity cannot be established
+  cheaply.
 * The key carries the owning SparkSession's JVM object id: a plan built
   on a stopped session can never be served to a new one.
 * All sketch parameters that shape the plan are part of the key at the
@@ -57,7 +59,7 @@ _MISSES = 0
 
 def source_key(df: DataFrame) -> tuple | None:
     """Collision-free identity of ``df``'s plan, or ``None`` when the frame
-    must not be memoized (disabled, streaming, or not file-backed)."""
+    must not be memoized (disabled, streaming, or not wholly file-backed)."""
     if os.environ.get("DDSPARK_PLAN_MEMO", "1") == "0":
         return None
     try:
@@ -66,7 +68,13 @@ def source_key(df: DataFrame) -> tuple | None:
         files = df.inputFiles()
         if not files:
             return None
-        canon = df._jdf.queryExecution().analyzed().canonicalized().toString()
+        analyzed = df._jdf.queryExecution().analyzed()
+        leaves = analyzed.collectLeaves()
+        for leaf in (leaves.apply(i) for i in range(leaves.size())):
+            if leaf.getClass().getSimpleName() != "LogicalRelation" or (
+                    leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"):
+                return None
+        canon = analyzed.canonicalized().toString()
         # session identity = (python gateway object, JVM object id): target
         # ids restart per JVM, so the gateway id guards against a new JVM
         # in the same process aliasing a stopped session's "oNN" id
@@ -99,6 +107,7 @@ def lookup(key: tuple | None, spark) -> DataFrame | None:
         out = DataFrame(_of_rows(spark)(spark._jsparkSession, plan), spark)
     except Exception:  # noqa: BLE001 — stale/defunct handle: drop and rebuild
         _PLAN_CACHE.pop(key, None)
+        _OFROWS.pop(id(spark._jvm), None)
         return None
     _HITS += 1
     return out

@@ -245,34 +245,33 @@ def proto_roundtrip_quantiles(states, qs, by=None, cfg=None):
     quantiles survive).
 
     ``states``: output of :func:`ddspark.agg.sketch_agg` (one state row per
-    group).  Returns ``by... | count | p50 ...`` per group.
+    group).  The Python stage only encodes and decodes; the decoded state
+    rows are finalized by :func:`ddspark.agg.finalize_quantiles`.  Returns
+    ``by... | count | p50 ...`` per group.
     """
     import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    from pyspark.sql.types import StructType
 
-    from .agg import STATE_COLS, _by_fields, quantile_label
+    from .agg import STATE_FIELDS, _by_fields, _state_dict, finalize_quantiles, quantile_label
 
     by = list(by or [])
     cfg = cfg or SketchConfig()
-    q_cols = [quantile_label(q) for q in qs]
-    schema = StructType(
-        _by_fields(states, by)
-        + [StructField("count", DoubleType())]
-        + [StructField(c, DoubleType()) for c in q_cols]
-    )
+    schema = StructType(_by_fields(states, by) + STATE_FIELDS)
 
     def rt(batches):
         for pdf in batches:
             out = []
             for rec in pdf.to_dict("records"):
                 sk = Sketch.from_state(cfg, rec)
-                decoded = sketch_from_proto_bytes(sketch_to_proto_bytes(sk))
                 row = {c: rec[c] for c in by}
-                row["count"] = decoded.count
-                for q, c in zip(qs, q_cols):
-                    row[c] = decoded.quantile(q)
+                row.update(
+                    _state_dict(sketch_from_proto_bytes(sketch_to_proto_bytes(sk)))
+                )
                 out.append(row)
             if out:
                 yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
 
-    return states.mapInPandas(rt, schema)
+    decoded = states.mapInPandas(rt, schema)
+    return finalize_quantiles(decoded, qs, cfg, by).select(
+        *by, "count", *[quantile_label(q) for q in qs]
+    )

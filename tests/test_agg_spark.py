@@ -182,6 +182,35 @@ def test_finalize_empty_group_is_absent(spark):
     assert len(res) == 0
 
 
+def test_empty_global_input_same_row_every_engine(spark):
+    """A global aggregate over no rows is one all-NULL row (SQL semantics),
+    whichever engine computes it."""
+    from ddspark.sqlpath import sql_quantile_sketch
+
+    df = spark.createDataFrame([], "v double")
+    cells = quantile_sketch(df, "v", qs=[0.5], engine="cells").collect()
+    kernel = quantile_sketch(df, "v", qs=[0.5], engine="kernel").collect()
+    sqlpath = sql_quantile_sketch(df, "v", qs=[0.5]).collect()
+    assert len(cells) == len(kernel) == len(sqlpath) == 1
+    assert cells == kernel
+    assert cells[0].asDict() == {
+        "count": None, "sum": None, "min": None, "max": None, "avg": None, "p50": None,
+    }
+    assert sqlpath[0].asDict() == {"count": None, "p50": None}
+
+
+def test_kernel_engine_has_only_build_and_merge_python_stages(spark, skewed_df):
+    """The kernel engine crosses into Python to build and to merge sketch
+    states; finalizing them runs in the JVM."""
+    import re
+
+    df, _ = skewed_df
+    out = quantile_sketch(df, "v", by=["lang"], qs=QS, engine="kernel")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    python_ops = re.findall(r"^[\s:+\-]*(\w*(?:InPandas|InArrow|EvalPython)\w*)", plan, re.M)
+    assert sorted(python_ops) == ["FlatMapGroupsInPandas", "MapInPandas"], plan
+
+
 def test_nonpositive_weight_fails_fast_cells_engine(spark):
     """The JVM cells path must reject weight <= 0 like the kernel engine and
     the reference (ddsketch/ddsketch.py:141-142), not corrupt counts."""

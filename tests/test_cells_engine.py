@@ -277,8 +277,15 @@ def test_finalize_cells_sql_matches_python_all_modes(spark, mixed_df):
     over the same cells (``_sketch_from_cells`` + ``Sketch.quantile``, as
     ``quantile_sketch_collect`` does) on mixed-sign data in every store
     mode — this is the property that licenses the ordering identity
-    documented on finalize_cells_sql."""
-    from ddspark.agg import _sketch_from_cells, build_cells, finalize_cells_sql
+    documented on finalize_cells_sql.  ``finalize_quantiles`` over the
+    kernel engine's state rows of the same data runs the same finalizer on
+    cells exploded from those states, and must agree too."""
+    from ddspark.agg import (
+        _sketch_from_cells,
+        build_cells,
+        finalize_cells_sql,
+        finalize_quantiles,
+    )
 
     df, _ = mixed_df
     for cfg in [
@@ -288,17 +295,21 @@ def test_finalize_cells_sql_matches_python_all_modes(spark, mixed_df):
     ]:
         cells = build_cells(df, "v", ["g"], cfg)
         local = {g: _sketch_from_cells(c, cfg) for g, c in cells.toPandas().groupby("g")}
-        res = finalize_cells_sql(cells, QS, ["g"], cfg).toPandas()
-        assert sorted(res["g"]) == sorted(local)
-        for row in res.to_dict("records"):
-            sk = local[row["g"]]
-            for col in ["count", "sum", "min", "max"]:
-                assert row[col] == getattr(sk, col), (cfg.mode, row["g"], col)
-            for q in QS:
-                # np.power vs JVM pow may differ in the last ulp
-                assert row[quantile_label(q)] == pytest.approx(
-                    sk.quantile(q), rel=1e-12
-                ), (cfg.mode, row["g"], q)
+        states = sketch_agg(df, "v", ["g"], cfg, engine="kernel")
+        for res in [
+            finalize_cells_sql(cells, QS, ["g"], cfg).toPandas(),
+            finalize_quantiles(states, QS, cfg, ["g"]).toPandas(),
+        ]:
+            assert sorted(res["g"]) == sorted(local)
+            for row in res.to_dict("records"):
+                sk = local[row["g"]]
+                for col in ["count", "sum", "min", "max"]:
+                    assert row[col] == getattr(sk, col), (cfg.mode, row["g"], col)
+                for q in QS:
+                    # np.power vs JVM pow may differ in the last ulp
+                    assert row[quantile_label(q)] == pytest.approx(
+                        sk.quantile(q), rel=1e-12
+                    ), (cfg.mode, row["g"], q)
 
 
 def test_finalize_cells_sql_negative_heavy_quantiles(spark):

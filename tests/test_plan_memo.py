@@ -128,6 +128,37 @@ def test_local_relation_bypasses(spark):
     assert len(plancache._PLAN_CACHE) == 0
 
 
+def test_join_with_local_relation_bypasses(spark, tmp_path):
+    """A file scan joined to an in-memory relation must not memoize: the
+    canonical plan elides LocalRelation rows, so two different dims once
+    shared one key and the second call returned the first join's groups."""
+    p = str(tmp_path / "base.parquet")
+    pd.DataFrame({"k": [1, 2, 3], "v": [1.0, 2.0, 3.0]}).to_parquet(p)
+    base = spark.read.parquet(p)
+    dim_a = spark.createDataFrame([(1, "x"), (2, "y"), (3, "z")], "k int, g string")
+    dim_b = spark.createDataFrame([(1, "x")], "k int, g string")
+    a = quantile_sketch(base.join(dim_a, "k"), "v", by=["g"], qs=[0.5])
+    b = quantile_sketch(base.join(dim_b, "k"), "v", by=["g"], qs=[0.5])
+    assert plancache._HITS == 0 and len(plancache._PLAN_CACHE) == 0
+    assert sorted(r["g"] for r in a.collect()) == ["x", "y", "z"]
+    assert [r["g"] for r in b.collect()] == ["x"]
+
+
+def test_file_self_join_memoized(spark, tmp_path):
+    p = str(tmp_path / "self.parquet")
+    pd.DataFrame({"k": [1, 2, 3], "g": ["a", "a", "b"], "v": [1.0, 2.0, 3.0]}).to_parquet(p)
+
+    def q():
+        left = spark.read.parquet(p)
+        right = spark.read.parquet(p).select("k", F.col("v").alias("w"))
+        return quantile_sketch(left.join(right, "k"), "w", by=["g"], qs=[0.5])
+
+    first = q().collect()
+    second = q().collect()
+    assert plancache._HITS == 1
+    assert first == second
+
+
 def test_sqlpath_memo(spark, tmp_path):
     p = str(tmp_path / "s.parquet")
     _write_parquet(p, [1.0, 2.0, 3.0, 4.0, 5.0])
