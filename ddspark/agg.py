@@ -8,18 +8,17 @@ custom partial-merging UDAF:
 1. **partial** — :func:`build_partials`: ``mapInPandas`` over the scan;
    each task turns its Arrow batches into *one sketch row per (group,
    partition)* with tight NumPy kernels (``np.log2`` → ``np.bincount``).
-   This is the map-side combine: the shuffle that follows moves kilobyte
-   sketch rows, never raw values, so group skew in the input does not
-   translate into shuffle skew.
-2. **final** — :func:`merge_partials`: ``groupBy(keys).applyInPandas`` doing
-   the associative store merge (reference ``ddsketch.py:186-215``), with an
-   optional intermediate tree level (``fanin``) for very high partition
-   counts.
-3. **finalize** — :func:`finalize_quantiles`: each merged row becomes
+   This is the map-side combine: the shuffle that follows moves the
+   partials' bucket cells, never raw values, so group skew in the input
+   does not translate into shuffle skew.
+2. **finalize** — :func:`finalize_quantiles`: each partial row becomes
    bucket cells inside the JVM (one ``inline`` of its bins) and runs
    through :func:`finalize_cells_sql`, the same Catalyst rank walk
    (reference ``ddsketch.py:159-184``) and exact count/sum/min/max/avg the
-   cells engine ends in — no Python stage.
+   cells engine ends in — no Python stage, and no merge first.
+3. **merge** — :func:`merge_partials`: ``groupBy(keys).applyInPandas``
+   doing the associative store merge (reference ``ddsketch.py:186-215``),
+   only where merged state rows are the output (:func:`sketch_agg`).
 
 The flagship entry point is :func:`quantile_sketch`.
 """
@@ -28,12 +27,10 @@ from __future__ import annotations
 
 import pandas as pd
 import numpy as np
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
-    IntegerType,
     LongType,
     StructField,
     StructType,
@@ -101,10 +98,9 @@ def build_partials(
     """Map-side combine: one sketch row per (group, input partition).
 
     Output schema: ``by... | gamma zero_count count sum min max pos_offset
-    pos_bins neg_offset neg_bins | rows | _pid``.  ``rows`` (values observed)
-    and ``_pid`` (task partition id) are the per-partition lineage the
-    checkpoint/resume layer keys on.  Null values are skipped (SQL aggregate
-    semantics; the reference API has no notion of null).
+    pos_bins neg_offset neg_bins | rows``, ``rows`` counting the values
+    observed.  Null values are skipped (SQL aggregate semantics; the
+    reference API has no notion of null).
     """
     by = list(by or [])
     cfg = cfg or SketchConfig()
@@ -113,7 +109,7 @@ def build_partials(
     schema = StructType(
         _by_fields(df, by)
         + STATE_FIELDS
-        + [StructField("rows", LongType(), False), StructField("_pid", IntegerType(), False)]
+        + [StructField("rows", LongType(), False)]
     )
 
     def gen(batches):
@@ -138,14 +134,12 @@ def build_partials(
                 w = g[weight_col].to_numpy(np.float64) if weight_col else None
                 groups.setdefault(key, []).append(Sketch.from_values(v, cfg, w))
                 rows[key] = rows.get(key, 0) + len(g)
-        pid = TaskContext.get().partitionId()
         out = []
         for key, sketches in groups.items():
             merged = Sketch.merge_all(sketches)
             rec = dict(zip(by, key))
             rec.update(_state_dict(merged))
             rec["rows"] = rows[key]
-            rec["_pid"] = pid
             out.append(rec)
         if out:
             yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
@@ -183,15 +177,9 @@ def merge_partials(
     partials: DataFrame,
     by: list[str] | None = None,
     cfg: SketchConfig | None = None,
-    fanin: int | None = None,
 ) -> DataFrame:
-    """Associative final merge of partial sketch rows.
-
-    With ``fanin`` set, a first tree level merges each group's partials in
-    ``fanin`` buckets (keyed on the originating partition id) before the
-    final single-row merge — bounding reducer fan-in at very large partition
-    counts (the ``treeReduce`` pattern expressed on DataFrames).
-    """
+    """Associative merge of partial sketch rows into one state row per
+    group.  Quantiles skip it: :func:`finalize_quantiles` reads partials."""
     by = list(by or [])
     cfg = cfg or SketchConfig()
     schema = StructType(
@@ -202,24 +190,11 @@ def merge_partials(
             StructField("n_partials", LongType(), False),
         ]
     )
-    df = partials
-    if fanin is not None and fanin > 1:
-        salt = F.pmod(F.col("_pid"), F.lit(fanin)).alias("_salt")
-        df = df.withColumn("_salt", salt)
-        stage_schema = StructType(schema.fields + [StructField("_salt", IntegerType())])
-
-        def merge_stage(key, pdf):
-            out = _merge_fn(by, cfg)(pdf)
-            out["_salt"] = key[-1]
-            return out
-
-        df = df.groupBy(*(by + ["_salt"])).applyInPandas(merge_stage, stage_schema)
-        df = df.drop("_salt")
     if by:
-        return df.groupBy(*by).applyInPandas(_merge_fn(by, cfg), schema)
+        return partials.groupBy(*by).applyInPandas(_merge_fn(by, cfg), schema)
     # global sketch: single group; partials are tiny (one row per partition)
     return (
-        df.withColumn("_g", F.lit(0))
+        partials.withColumn("_g", F.lit(0))
         .groupBy("_g")
         .applyInPandas(lambda pdf: _merge_fn([], cfg)(pdf), schema)
     )
@@ -729,7 +704,7 @@ def quantile_label(q: float) -> str:
     return f"p{s}"
 
 
-def _state_cells(merged: DataFrame, by: list[str]) -> DataFrame:
+def _state_cells(states: DataFrame, by: list[str]) -> DataFrame:
     """Sketch-state rows as bucket cells ``by... _sgn _k _c _s _mn _mx``,
     all in the JVM: one zero cell ``(0, 0, zero_count)`` carrying the row's
     exact sum/min/max, then one cell per non-zero bin.  A zero-count zero
@@ -753,7 +728,7 @@ def _state_cells(merged: DataFrame, by: list[str]) -> DataFrame:
         zero = cell(0, F.lit(0), F.col("zero_count"), F.col("sum"), F.col("min"), F.col("max"))
         return F.inline(F.concat(F.array(zero), bins(-1, "neg"), bins(1, "pos")))
 
-    return merged.select(*by, _cached_cols(("state_cells",), build))
+    return states.select(*by, _cached_cols(("state_cells",), build))
 
 
 def finalize_quantiles(
@@ -762,13 +737,21 @@ def finalize_quantiles(
     cfg: SketchConfig | None = None,
     by: list[str] | None = None,
 ) -> DataFrame:
-    """Quantile extraction + exact stats from merged sketch-state rows, by
-    :func:`finalize_cells_sql` over the rows' cells.
+    """Quantile extraction + exact stats from sketch-state rows, merged or
+    not (a group's rows act as their merge: equal keys sit adjacent in the
+    rank walk, and a partial's collapse bound never passes the group's),
+    by :func:`finalize_cells_sql` over the rows' cells.
 
     Output: ``by... | count sum min max avg | p50 p95 ...``.
     """
     by = list(by or [])
     return finalize_cells_sql(_state_cells(merged, by), list(qs), by, cfg)
+
+
+def _engine(engine: str) -> str:
+    if engine not in ("auto", "cells", "kernel"):
+        raise ValueError(f"engine must be one of auto, cells, kernel; got {engine!r}")
+    return "cells" if engine == "auto" else engine
 
 
 def sketch_agg(
@@ -777,7 +760,6 @@ def sketch_agg(
     by: list[str] | None = None,
     cfg: SketchConfig | None = None,
     weight_col: str | None = None,
-    fanin: int | None = None,
     engine: str = "auto",
 ) -> DataFrame:
     """Merged sketch-state rows per group.
@@ -789,15 +771,13 @@ def sketch_agg(
       assembles one state row per group from its bucket cells
       (:func:`assemble_cells`).  No raw row crosses the JVM/Python boundary.
     * ``kernel`` — Arrow-batch NumPy kernels per partition (mapInPandas) +
-      associative applyInPandas merge; keeps the per-partition partials
-      and lineage that checkpointing needs.
+      associative applyInPandas merge (:func:`merge_partials`).
     """
     by = list(by or [])
     cfg = cfg or SketchConfig()
-    if engine in ("auto", "cells"):
+    if _engine(engine) == "cells":
         return assemble_cells(build_cells(df, value_col, by, cfg, weight_col), by, cfg)
-    partials = build_partials(df, value_col, by, cfg, weight_col)
-    return merge_partials(partials, by, cfg, fanin=fanin)
+    return merge_partials(build_partials(df, value_col, by, cfg, weight_col), by, cfg)
 
 
 def quantile_sketch(
@@ -807,7 +787,6 @@ def quantile_sketch(
     qs: list[float] = (0.5, 0.95, 0.99),
     cfg: SketchConfig | None = None,
     weight_col: str | None = None,
-    fanin: int | None = None,
     engine: str = "auto",
     exact_stats: bool = True,
 ) -> DataFrame:
@@ -819,10 +798,10 @@ def quantile_sketch(
     exact rank value.
 
     ``engine="cells"`` (the default) runs with no Python stage at all;
-    ``engine="kernel"`` builds and merges sketch states with NumPy kernels
-    (two Python stages, :func:`sketch_agg`) and finalizes them in the JVM
-    through :func:`finalize_quantiles`.  Both end in
-    :func:`finalize_cells_sql`.
+    ``engine="kernel"`` builds one sketch state per (group, partition) with
+    NumPy kernels (one Python stage, :func:`build_partials`) and finalizes
+    those partials in the JVM through :func:`finalize_quantiles`, with no
+    merge stage.  Both end in :func:`finalize_cells_sql`.
 
     ``exact_stats=False`` (cells engine only) omits sum/min/max/avg and
     halves the per-cell state — the lean shape for quantiles-only jobs at
@@ -832,7 +811,7 @@ def quantile_sketch(
 
     by = list(by or [])
     cfg = cfg or SketchConfig()
-    engine = "cells" if engine == "auto" else engine
+    engine = _engine(engine)
     # plan memo (ddspark.plancache): repeated invocations over the same
     # file-backed input rebuild an IDENTICAL logical plan — serve the
     # memoized plan in a fresh Dataset instead of paying ~100 ms of py4j +
@@ -844,7 +823,7 @@ def quantile_sketch(
             "quantile_sketch", value_col, tuple(by),
             tuple(float(q) for q in qs),
             cfg.relative_accuracy, cfg.mapping, cfg.mode, cfg.bin_limit,
-            cfg.offset, weight_col, fanin, engine, exact_stats,
+            cfg.offset, weight_col, engine, exact_stats,
         )
         hit = lookup(key, df.sparkSession)
         if hit is not None:
@@ -856,8 +835,8 @@ def quantile_sketch(
         # interpreter dispatch (at 10^6 groups this is ~10x the Arrow path)
         cells = build_cells(df, value_col, by, cfg, weight_col, stats=exact_stats)
         return store(key, finalize_cells_sql(cells, list(qs), by, cfg))
-    merged = sketch_agg(df, value_col, by, cfg, weight_col, fanin=fanin, engine=engine)
-    return store(key, finalize_quantiles(merged, list(qs), cfg, by))
+    partials = build_partials(df, value_col, by, cfg, weight_col)
+    return store(key, finalize_quantiles(partials, list(qs), cfg, by))
 
 
 def quantile_sketch_multi(

@@ -13,9 +13,10 @@ Layout:
 
 Resume logic: list the input files, subtract the files recorded by
 *successful* attempts (lineage column ``_file``), process only the rest in
-a new attempt, then merge every attempt's partials.  Interrupted attempts
-(no ``_SUCCESS``) are ignored and redone — per-row exactly-once falls out of
-file-granular idempotency, not task-level bookkeeping.
+a new attempt, then merge (or, for quantiles, directly finalize) every
+attempt's partials.  Interrupted attempts (no ``_SUCCESS``) are ignored and
+redone — per-row exactly-once falls out of file-granular idempotency, not
+task-level bookkeeping.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from dataclasses import asdict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -63,32 +65,26 @@ def _completed_files(ckpt_dir: str) -> set[str]:
     return done
 
 
-def checkpointed_sketch_agg(
+def _checkpointed_partials(
     spark: SparkSession,
     input_path: str,
     value_expr: str,
-    by: list[str] | None = None,
-    cfg: SketchConfig | None = None,
-    ckpt_dir: str = "",
-    weight_col: str | None = None,
-    max_files: int | None = None,
+    by: list[str],
+    cfg: SketchConfig,
+    ckpt_dir: str,
+    weight_col: str | None,
+    max_files: int | None,
 ) -> DataFrame:
-    """Resumable grouped sketch over a parquet table.
-
-    ``value_expr`` may be any column expression (e.g. ``length(content)``).
-    ``max_files`` caps how many input files this invocation processes —
-    callers can budget work per run and resume later; the return value is
-    the merge of *all* checkpointed partials so far.
-    """
-    by = list(by or [])
-    cfg = cfg or SketchConfig()
+    """Run the next attempt over the unprocessed files, then read back the
+    partial rows of every completed attempt (``_file`` lineage dropped)."""
     if not ckpt_dir:
         raise ValueError("ckpt_dir is required")
     os.makedirs(ckpt_dir, exist_ok=True)
 
     # refuse to mix parameters within one checkpoint dir: partials built
-    # from a different value_expr/by/weight would merge silently otherwise
-    params = {"value_expr": value_expr, "by": by, "weight_col": weight_col}
+    # from a different value_expr/by/weight or sketch config (gamma alone
+    # does not tell mappings apart) would combine silently otherwise
+    params = {"value_expr": value_expr, "by": by, "weight_col": weight_col, **asdict(cfg)}
     for info in attempts_info(ckpt_dir):
         recorded = {k: info.get(k) for k in params}
         if recorded != params:
@@ -131,9 +127,7 @@ def checkpointed_sketch_agg(
                     "n_files": len(todo),
                     "rows": int(rows),
                     "seconds": round(time.perf_counter() - t0, 3),
-                    "value_expr": value_expr,
-                    "by": by,
-                    "weight_col": weight_col,
+                    **params,
                 },
                 fh,
             )
@@ -141,7 +135,7 @@ def checkpointed_sketch_agg(
     # an attempt counts only when BOTH the parquet _SUCCESS and the metadata
     # json exist — the same criterion _completed_files uses for resume dedup.
     # (A crash between the two would otherwise double-count the attempt's
-    # files: resume reprocesses them while the merge still reads the orphan.)
+    # files: resume reprocesses them while the read-back keeps the orphan.)
     good = [
         d
         for d in _attempt_dirs(ckpt_dir)
@@ -149,7 +143,31 @@ def checkpointed_sketch_agg(
     ]
     if not good:
         raise ValueError(f"no completed attempts under {ckpt_dir}")
-    partials = spark.read.parquet(*good).drop("_file")
+    return spark.read.parquet(*good).drop("_file")
+
+
+def checkpointed_sketch_agg(
+    spark: SparkSession,
+    input_path: str,
+    value_expr: str,
+    by: list[str] | None = None,
+    cfg: SketchConfig | None = None,
+    ckpt_dir: str = "",
+    weight_col: str | None = None,
+    max_files: int | None = None,
+) -> DataFrame:
+    """Resumable grouped sketch over a parquet table.
+
+    ``value_expr`` may be any column expression (e.g. ``length(content)``).
+    ``max_files`` caps how many input files this invocation processes —
+    callers can budget work per run and resume later; the return value is
+    the merge of *all* checkpointed partials so far.
+    """
+    by = list(by or [])
+    cfg = cfg or SketchConfig()
+    partials = _checkpointed_partials(
+        spark, input_path, value_expr, by, cfg, ckpt_dir, weight_col, max_files
+    )
     return merge_partials(partials, by, cfg)
 
 
@@ -166,7 +184,7 @@ def checkpointed_quantile_sketch(
 ) -> DataFrame:
     by = list(by or [])
     cfg = cfg or SketchConfig()
-    merged = checkpointed_sketch_agg(
+    partials = _checkpointed_partials(
         spark, input_path, value_expr, by, cfg, ckpt_dir, weight_col, max_files
     )
-    return finalize_quantiles(merged, list(qs), cfg, by)
+    return finalize_quantiles(partials, list(qs), cfg, by)

@@ -278,11 +278,13 @@ def test_finalize_cells_sql_matches_python_all_modes(spark, mixed_df):
     ``quantile_sketch_collect`` does) on mixed-sign data in every store
     mode — this is the property that licenses the ordering identity
     documented on finalize_cells_sql.  ``finalize_quantiles`` over the
-    kernel engine's state rows of the same data runs the same finalizer on
-    cells exploded from those states, and must agree too."""
+    kernel engine's state rows of the same data — merged, and the unmerged
+    per-partition partials — runs the same finalizer on cells exploded from
+    those states, and must agree too."""
     from ddspark.agg import (
         _sketch_from_cells,
         build_cells,
+        build_partials,
         finalize_cells_sql,
         finalize_quantiles,
     )
@@ -296,9 +298,11 @@ def test_finalize_cells_sql_matches_python_all_modes(spark, mixed_df):
         cells = build_cells(df, "v", ["g"], cfg)
         local = {g: _sketch_from_cells(c, cfg) for g, c in cells.toPandas().groupby("g")}
         states = sketch_agg(df, "v", ["g"], cfg, engine="kernel")
+        partials = build_partials(df, "v", ["g"], cfg)
         for res in [
             finalize_cells_sql(cells, QS, ["g"], cfg).toPandas(),
             finalize_quantiles(states, QS, cfg, ["g"]).toPandas(),
+            finalize_quantiles(partials, QS, cfg, ["g"]).toPandas(),
         ]:
             assert sorted(res["g"]) == sorted(local)
             for row in res.to_dict("records"):

@@ -135,6 +135,14 @@ def test_checkpoint_rejects_parameter_change(spark, tmp_path):
     checkpointed_sketch_agg(spark, src, "length(content)", ["lang"], CFG, ck).collect()
     with pytest.raises(ValueError, match="refusing to resume"):
         checkpointed_sketch_agg(spark, src, "length(path)", ["lang"], CFG, ck).collect()
+    # same gamma, different bucket keys: the cubic mapping's partials must
+    # not be finalized as logarithmic ones
+    cubic = SketchConfig(0.01, mapping="cubic")
+    assert cubic.gamma == CFG.gamma
+    with pytest.raises(ValueError, match="refusing to resume"):
+        checkpointed_quantile_sketch(
+            spark, src, "length(content)", by=["lang"], cfg=cubic, ckpt_dir=ck
+        ).collect()
 
 
 def test_checkpoint_attempt_numbering_survives_gaps(spark, tmp_path):
