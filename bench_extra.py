@@ -4,6 +4,9 @@ Isolates the headline queries (same definitions as bench.py) with:
   * per-query wall time via the noop sink AND .collect() (bench methodology)
   * optional .explain("formatted") dumps to plans/r06/
   * breakdown timings (scan-only, cells-only) for attribution
+  * per query and round, the classes Spark compiled and their compile ms
+    (``codegen_warmup``, ``codegen_rounds``): 0 on a round means the query
+    ran on already-compiled code
 
 Usage:
   python bench_extra.py [--sf DIR] [--plans] [--rounds N] [--queries a,b,...]
@@ -24,7 +27,7 @@ os.environ.setdefault("SPARK_HOME", "/opt/spark")
 from pyspark.sql import functions as F
 
 from ddspark.agg import quantile_sketch
-from ddspark.session import get_spark
+from ddspark.session import codegen_counters, get_spark
 from ddspark.sketch import SketchConfig
 from ddspark.sqlpath import sql_quantile_sketch
 from ddspark.store import COLLAPSE_LOWEST
@@ -95,24 +98,36 @@ def main():
         spark.stop()
         return
 
+    def compiled_since(before: tuple) -> dict:
+        n, ms = codegen_counters(spark)
+        return {"compiles": n - before[0], "compile_ms": round(ms - before[1], 1)}
+
     # warm every query (bench methodology)
-    for fn in qsuite.values():
+    warm_codegen = {}
+    for name, fn in qsuite.items():
+        c0 = codegen_counters(spark)
         fn().collect()
-    rounds = []
+        warm_codegen[name] = compiled_since(c0)
+    rounds, codegen_rounds = [], []
     for _ in range(args.rounds):
-        t = {}
+        t, cg = {}, {}
         for name, fn in qsuite.items():
             spark.sparkContext.setJobDescription(f"headline:{name}")
+            c0 = codegen_counters(spark)
             t0 = time.perf_counter()
             fn().collect()
             t[name] = round(time.perf_counter() - t0, 4)
+            cg[name] = compiled_since(c0)
         rounds.append(t)
+        codegen_rounds.append(cg)
     best = {n: min(r[n] for r in rounds) for n in rounds[0]}
     print(json.dumps({
         "sf": args.sf,
         "queries": best,
         "value": round(sum(best.values()), 4),
         "rounds": rounds,
+        "codegen_warmup": warm_codegen,
+        "codegen_rounds": codegen_rounds,
     }))
     spark.stop()
 

@@ -1,11 +1,15 @@
 """Plan-construction memo for the repeated-invocation sketch APIs.
 
-Building a sketch query's DataFrame costs ~80-140 ms of driver latency
-even with the expression trees memoized (:func:`ddspark.agg._cached_cols`):
-each DataFrame operation is a py4j round trip plus an eager JVM analyzer
-pass over the growing logical plan.  Workloads that issue the same query
+Building a sketch query's DataFrame costs 115-190 ms of driver latency
+(fresh construction in the ``perfbench`` interactive mix) even with the
+expression trees memoized (:func:`ddspark.agg._cached_cols`): each
+DataFrame operation is a py4j round trip plus an eager JVM analyzer pass
+over the growing logical plan.  Workloads that issue the same query
 repeatedly — dashboards, retry loops, streaming ``foreachBatch`` — pay
-that construction on every invocation.
+that construction on every invocation.  A memo hit saves construction
+only: the hit is planned and code-generated afresh, and its classes come
+from Spark's generated-code cache (sized in :mod:`ddspark.session`), not
+from this memo.
 
 This module memoizes the *analyzed logical plan* (a JVM plan-tree handle —
 never data, rows, or results).  A cache hit wraps that plan in a FRESH

@@ -3,6 +3,19 @@
 Local mode stands in for a multi-executor cluster in this sandbox; the same
 configs (AQE, Arrow batching, shuffle sizing) are the ones that matter on a
 real 1000-executor deployment.
+
+Generated-code cache.  Spark compiles each whole-stage and expression class
+with Janino and keeps the result in ``CodeGenerator``'s cache, keyed by the
+generated source.  Its default 100 entries are fewer than a mix of sketch
+queries uses: twelve query shapes (table, value column, ``by``, number of
+quantiles, alpha, path) need more than 100 classes (11-15 each), so the cache
+evicts classes between uses and a repeat call recompiles ~10 of them
+(4-20), then runs them cold in the JIT.  :func:`get_spark` sets
+``spark.sql.codegen.cache.maxEntries`` to 1000 (sketch-query classes
+average 2.6 KB of bytecode, so a full cache holds ~3 MB).  It is a *static* SQL conf, read once when the JVM's
+``CodeGenerator`` first compiles: it must be set when the session is built,
+and ``spark.conf.set`` on a running session has no effect.
+:func:`codegen_counters` reads the JVM's compile count and time.
 """
 
 from __future__ import annotations
@@ -54,6 +67,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # static: see the module docstring
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # Spark 4's Arrow batching enforces maxBytesPerBatch (default 64 MB)
@@ -87,3 +102,16 @@ def get_spark(
     except Exception:
         pass  # already added in this context, or a non-writable tmp
     return spark
+
+
+def codegen_counters(spark: SparkSession) -> tuple[int, float]:
+    """``(classes compiled, compile ms)`` since the JVM started: the Janino
+    compile count (``CodegenMetrics``) and total compile time
+    (``CodeGenerator.compileTime``).  Only a cache miss compiles, so the
+    difference of two readings is what the calls between them compiled."""
+    jvm = spark.sparkContext._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+        .CodeGenerator.compileTime()
+    return int(count), nanos / 1e6

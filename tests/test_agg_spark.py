@@ -162,6 +162,22 @@ def test_gamma_guard_across_pipeline(spark):
         merge_partials(partials, [], cfg_b).collect()
 
 
+def test_finalize_quantiles_rejects_states_of_another_alpha(spark):
+    """State rows built at alpha 0.02 and finalized at 0.01 were silently
+    read with the wrong gamma; they must be refused like merge_partials
+    refuses them, and finalize within alpha at their own config."""
+    rng = np.random.default_rng(9)
+    pdf = pd.DataFrame({"g": rng.choice(["a", "b"], 20_000),
+                        "v": np.exp(rng.uniform(0.0, np.log(1e4), 20_000))})
+    partials = build_partials(spark.createDataFrame(pdf), "v", ["g"], SketchConfig(0.02))
+    with pytest.raises(Exception, match="Cannot finalize DDSketch states with different parameters"):
+        finalize_quantiles(partials, [0.5], SketchConfig(0.01), ["g"]).collect()
+    got = finalize_quantiles(partials, [0.5], SketchConfig(0.02), ["g"]).toPandas()
+    for row in got.itertuples():
+        exact = exact_quantile(pdf.loc[pdf["g"] == row.g, "v"].to_numpy(), 0.5)
+        assert abs(row.p50 - exact) <= 0.02 * exact
+
+
 def test_finalize_empty_group_is_absent(spark):
     # groups simply don't appear when they have no rows; empty input -> empty out
     df = spark.createDataFrame([], "g string, v double")

@@ -284,24 +284,29 @@ def test_bloom_contains_df_no_false_negatives(spark, items_df):
 
 def test_proto_roundtrip_quantiles_distributed(spark, items_df):
     from ddspark.agg import quantile_sketch, sketch_agg
-    from ddspark.proto import proto_roundtrip_quantiles
-    from ddspark.sketch import SketchConfig
+    from ddspark.proto import proto_roundtrip_quantiles, sketch_from_proto_bytes, sketch_to_proto_bytes
+    from ddspark.sketch import Sketch, SketchConfig
 
     df, _ = items_df
-    cfg = SketchConfig(0.02)
+    # at the second alpha the decoder's gamma is one ulp off the config's;
+    # the finalizer's gamma check must still accept the decoded states
+    drift = SketchConfig(0.13907553776888446)
+    one = Sketch.from_values(np.array([1.0, 2.0]), drift)
+    assert sketch_from_proto_bytes(sketch_to_proto_bytes(one)).cfg.gamma != drift.gamma
     vdf = df.withColumn("v", F.abs(F.xxhash64("item")).cast("double") + 1.0)
-    states = sketch_agg(vdf, "v", ["g"], cfg)
-    rt = proto_roundtrip_quantiles(states, [0.5, 0.95], ["g"], cfg).toPandas()
-    direct = quantile_sketch(vdf, "v", ["g"], [0.5, 0.95], cfg).toPandas()
-    merged = rt.merge(direct, on="g", suffixes=("_rt", "_d"))
-    assert len(merged) == len(direct) == 2
-    for q in ["p50", "p95"]:
-        a = merged[f"{q}_rt"].to_numpy()
-        b = merged[f"{q}_d"].to_numpy()
-        assert np.allclose(a, b, rtol=1e-9), q
-    assert np.allclose(
-        merged["count_rt"].to_numpy(), merged["count_d"].to_numpy()
-    )
+    for cfg in (SketchConfig(0.02), drift):
+        states = sketch_agg(vdf, "v", ["g"], cfg)
+        rt = proto_roundtrip_quantiles(states, [0.5, 0.95], ["g"], cfg).toPandas()
+        direct = quantile_sketch(vdf, "v", ["g"], [0.5, 0.95], cfg).toPandas()
+        merged = rt.merge(direct, on="g", suffixes=("_rt", "_d"))
+        assert len(merged) == len(direct) == 2
+        for q in ["p50", "p95"]:
+            a = merged[f"{q}_rt"].to_numpy()
+            b = merged[f"{q}_d"].to_numpy()
+            assert np.allclose(a, b, rtol=1e-9), q
+        assert np.allclose(
+            merged["count_rt"].to_numpy(), merged["count_d"].to_numpy()
+        )
 
 
 # --------------------------------------------------------- Misra-Gries (MG)
