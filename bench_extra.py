@@ -7,6 +7,8 @@ Isolates the headline queries (same definitions as bench.py) with:
   * per query and round, the classes Spark compiled and their compile ms
     (``codegen_warmup``, ``codegen_rounds``): 0 on a round means the query
     ran on already-compiled code
+  * per query, the median driver construction time (no action) of a
+    first-seen quantile set and of its repeat (``construct_ms``)
 
 Usage:
   python bench_extra.py [--sf DIR] [--plans] [--rounds N] [--queries a,b,...]
@@ -17,6 +19,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -40,29 +43,43 @@ def suite(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return {
-        "price_by_returnflag": lambda: quantile_sketch(
+        "price_by_returnflag": lambda qs=QS: quantile_sketch(
             li.where(F.col("l_extendedprice") > 0), "l_extendedprice",
-            by=["l_returnflag"], qs=QS, cfg=SketchConfig(0.01),
+            by=["l_returnflag"], qs=qs, cfg=SketchConfig(0.01),
         ),
-        "price_global": lambda: quantile_sketch(
+        "price_global": lambda qs=QS: quantile_sketch(
             li.where(F.col("l_extendedprice") > 0), "l_extendedprice",
-            by=None, qs=QS, cfg=SketchConfig(0.01),
+            by=None, qs=qs, cfg=SketchConfig(0.01),
         ),
-        "docs_by_lang": lambda: quantile_sketch(
-            docs, "n_chars", by=["lang"], qs=QS, cfg=SketchConfig(0.01)
+        "docs_by_lang": lambda qs=QS: quantile_sketch(
+            docs, "n_chars", by=["lang"], qs=qs, cfg=SketchConfig(0.01)
         ),
-        "events_collapsing": lambda: quantile_sketch(
-            ev.where(F.col("value") > 0), "value", by=["event_type"], qs=QS,
+        "events_collapsing": lambda qs=QS: quantile_sketch(
+            ev.where(F.col("value") > 0), "value", by=["event_type"], qs=qs,
             cfg=SketchConfig(0.02, mode=COLLAPSE_LOWEST, bin_limit=512),
         ),
-        "kernel_engine_by_flag": lambda: quantile_sketch(
+        "kernel_engine_by_flag": lambda qs=QS: quantile_sketch(
             li.where(F.col("l_extendedprice") > 0), "l_extendedprice",
-            by=["l_returnflag"], qs=QS, cfg=SketchConfig(0.01), engine="kernel",
+            by=["l_returnflag"], qs=qs, cfg=SketchConfig(0.01), engine="kernel",
         ),
-        "sqlpath_quantity": lambda: sql_quantile_sketch(
-            li, "l_quantity", ["l_linestatus"], QS, 0.05
+        "sqlpath_quantity": lambda qs=QS: sql_quantile_sketch(
+            li, "l_quantity", ["l_linestatus"], qs, 0.05
         ),
     }
+
+
+def construct_ms(fn, reps: int = 7) -> dict:
+    """Median ms to construct (no action) ``fn`` with a first-seen quantile
+    set, and with the same set again."""
+    fresh, repeat = [], []
+    for i in range(reps):
+        qs = [round(0.011 + 0.013 * i, 3), 0.5, round(0.987 - 0.011 * i, 3)]
+        for times in (fresh, repeat):
+            t0 = time.perf_counter()
+            fn(qs)
+            times.append((time.perf_counter() - t0) * 1e3)
+    return {"fresh": round(statistics.median(fresh), 1),
+            "repeat": round(statistics.median(repeat), 1)}
 
 
 def main():
@@ -121,6 +138,7 @@ def main():
         rounds.append(t)
         codegen_rounds.append(cg)
     best = {n: min(r[n] for r in rounds) for n in rounds[0]}
+    construct = {name: construct_ms(fn) for name, fn in qsuite.items()}
     print(json.dumps({
         "sf": args.sf,
         "queries": best,
@@ -128,6 +146,7 @@ def main():
         "rounds": rounds,
         "codegen_warmup": warm_codegen,
         "codegen_rounds": codegen_rounds,
+        "construct_ms": construct,
     }))
     spark.stop()
 

@@ -35,7 +35,31 @@ __all__ = [
     "CubicallyInterpolatedMapping",
     "mapping_from_name",
     "MAPPING_NAMES",
+    "relative_accuracy_for_gamma",
 ]
+
+
+def _gamma(relative_accuracy: float) -> float:
+    return 1.0 + 2.0 * relative_accuracy / (1.0 - relative_accuracy)
+
+
+def relative_accuracy_for_gamma(gamma: float) -> float:
+    """The alpha whose mapping has exactly this ``gamma``.
+
+    ``(gamma - 1)/(gamma + 1)`` inverts ``gamma = 1 + 2*alpha/(1 - alpha)``
+    only up to rounding: at some alphas the rebuilt gamma is one ulp off the
+    original, and sketches of the two gammas refuse to merge.  So the
+    quotient is snapped to the nearest alpha (within two ulps) that rebuilds
+    ``gamma`` bit for bit; a gamma that no nearby alpha produces keeps the
+    quotient.
+    """
+    alpha = (gamma - 1.0) / (gamma + 1.0)
+    candidates = [alpha]
+    up = down = alpha
+    for _ in range(2):
+        up, down = math.nextafter(up, 1.0), math.nextafter(down, 0.0)
+        candidates += [up, down]
+    return next((a for a in candidates if _gamma(a) == gamma), alpha)
 
 
 class KeyMapping(ABC):
@@ -58,7 +82,7 @@ class KeyMapping(ABC):
         self.relative_accuracy = float(relative_accuracy)
         self._offset = float(offset)
         gamma_mantissa = 2.0 * relative_accuracy / (1.0 - relative_accuracy)
-        self.gamma = 1.0 + gamma_mantissa
+        self.gamma = _gamma(relative_accuracy)
         self._multiplier = 1.0 / math.log1p(gamma_mantissa)
         self.min_possible = sys.float_info.min * self.gamma
         self.max_possible = sys.float_info.max / self.gamma
@@ -66,8 +90,7 @@ class KeyMapping(ABC):
     @classmethod
     def from_gamma_offset(cls, gamma: float, offset: float) -> "KeyMapping":
         """Rebuild a mapping from its wire parameters (gamma, index offset)."""
-        relative_accuracy = (gamma - 1.0) / (gamma + 1.0)
-        return cls(relative_accuracy, offset=offset)
+        return cls(relative_accuracy_for_gamma(gamma), offset=offset)
 
     # -- vector kernels (the API the Spark layer uses) ----------------------
 

@@ -29,6 +29,7 @@ import struct
 
 import numpy as np
 
+from .mapping import relative_accuracy_for_gamma
 from .sketch import Sketch, SketchConfig
 from .store import Bins, canonicalize, empty_bins
 
@@ -216,9 +217,9 @@ def sketch_from_proto_bytes(data: bytes) -> Sketch:
         raise ValueError("proto DDSketch missing mapping.gamma")
     if interp not in _ENUM_TO_MAPPING:
         raise ValueError(f"unsupported interpolation enum {interp}")
-    relative_accuracy = (gamma - 1.0) / (gamma + 1.0)
     cfg = SketchConfig(
-        relative_accuracy, mapping=_ENUM_TO_MAPPING[interp], offset=offset
+        relative_accuracy_for_gamma(gamma), mapping=_ENUM_TO_MAPPING[interp],
+        offset=offset,
     )
     count = float(pos[1].sum() + neg[1].sum() + zero_count)
     # wire format drops min/max/sum (reference pb/proto.py:91-94)

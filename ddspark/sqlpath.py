@@ -30,13 +30,14 @@ from pyspark.sql import DataFrame, functions as F
 
 from .agg import (
     _cached_cols,
+    _finalize_tail,
+    _finalize_walk,
     build_cells,
-    finalize_cells_sql,
     keyed_projection,
     quantile_label,
 )
 from .mapping import LogarithmicMapping
-from .plancache import lookup, source_key, store
+from .plancache import memoized
 from .sketch import SketchConfig
 from .store import COLLAPSE_HIGHEST, COLLAPSE_LOWEST
 
@@ -65,28 +66,25 @@ def sql_quantile_sketch(
     Weighted adds (fractional weights included) via ``weight_col``.
     """
     by = list(by or [])
-
-    # plan memo: identical repeated invocations serve the memoized plan in
-    # a fresh Dataset (a plan, never data — see ddspark.plancache)
-    memo_key = source_key(df)
-    if memo_key is not None:
-        memo_key += (
-            "sql_quantile_sketch", value_col, tuple(by),
-            tuple(float(q) for q in qs), float(alpha), mode, bin_limit,
-            weight_col,
-        )
-        hit = lookup(memo_key, df.sparkSession)
-        if hit is not None:
-            return hit
-
     # mode/bin_limit collapse only when both are set, as they always have
     if mode in (COLLAPSE_LOWEST, COLLAPSE_HIGHEST) and bin_limit:
         cfg = SketchConfig(alpha, mode=mode, bin_limit=bin_limit)
     else:
         cfg = SketchConfig(alpha)
-    positive = _cached_cols(("sqlpath_pos", value_col), lambda: F.col(value_col) > 0)
-    cells = build_cells(df.where(positive), value_col, by, cfg, weight_col, stats=False)
-    return store(memo_key, finalize_cells_sql(cells, list(qs), by, cfg))
+
+    def walk():
+        positive = _cached_cols(("sqlpath_pos", value_col), lambda: F.col(value_col) > 0)
+        cells = build_cells(df.where(positive), value_col, by, cfg, weight_col, stats=False)
+        return _finalize_walk(cells, by, cfg)
+
+    # plan memo: a repeated invocation serves the memoized plan, and a new
+    # quantile set the memoized walk, in a fresh Dataset (plans, never data
+    # — see ddspark.plancache)
+    shape = (
+        "sql_quantile_sketch", value_col, tuple(by), float(alpha), mode, bin_limit,
+        weight_col,
+    )
+    return memoized(df, shape, qs, walk, lambda w: _finalize_tail(w, list(qs), by, False))
 
 
 def _ansi_key_sql(mapping_name: str, mapping) -> tuple[str, str]:

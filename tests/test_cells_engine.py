@@ -7,15 +7,20 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
+from ddspark import plancache
 from ddspark.agg import (
+    _state_cells,
+    build_cells,
+    build_partials,
     quantile_label,
     quantile_sketch,
     sketch_agg,
 )
 from ddspark.datasets import exact_quantile, generate
 from ddspark.sketch import Sketch, SketchConfig
+from ddspark.sqlpath import sql_quantile_sketch
 from ddspark.store import COLLAPSE_HIGHEST, COLLAPSE_LOWEST
 
 ALPHA = 0.01
@@ -457,3 +462,113 @@ def test_rolling_quantiles_plan_one_scan_no_python(spark):
     )
     assert plan.count("FileScan") == 1, plan
     assert "Python" not in plan
+
+
+def _column_finalize(cells, qs, by, cfg):
+    """The finalizer as one Column tree per output column, clamp, running
+    count and value inlined into each quantile's aggregate, ranks read from
+    one array literal: the form before the walk/tail split."""
+    part = Window.partitionBy(*by) if by else Window.partitionBy(F.lit(0))
+    if cfg.mode in (COLLAPSE_LOWEST, COLLAPSE_HIGHEST):
+        lowest = cfg.mode == COLLAPSE_LOWEST
+
+        def bound(sgn):
+            e = (F.max if lowest else F.min)(F.when(F.col("_sgn") == sgn, F.col("_k")))
+            off = F.lit(cfg.bin_limit - 1)
+            return e.over(part) - off if lowest else e.over(part) + off
+
+        lim = F.when(F.col("_sgn") == 1, bound(1)).otherwise(bound(-1))
+        clamp = (F.greatest if lowest else F.least)(F.col("_k"), lim)
+        cells = cells.withColumn(
+            "_k", F.when(F.col("_sgn") == 0, F.col("_k")).otherwise(clamp))
+    w_cum = part.orderBy(F.col("_sgn").asc(), (F.col("_sgn") * F.col("_k")).asc()
+                         ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    cum = cells.withColumns({"run": F.sum("_c").over(w_cum), "n": F.sum("_c").over(part)})
+    val = F.when(F.col("_sgn") == 0, F.lit(0.0)).otherwise(
+        F.col("_sgn").cast("double") * cfg.key_mapping.value_expr(F.col("_k")))
+    aggs = [F.sum("_c").alias("count")]
+    if "_s" in cells.columns:
+        aggs += [F.sum("_s").alias("sum"), F.min("_mn").alias("min"),
+                 F.max("_mx").alias("max"), (F.sum("_s") / F.sum("_c")).alias("avg")]
+    ranks = F.transform(F.lit([float(q) for q in qs]), lambda x: x * (F.col("n") - 1))
+    aggs += [F.min(F.when(F.col("run") > ranks[i], val)).alias(quantile_label(q))
+             for i, q in enumerate(qs)]
+    return cum.groupBy(*by).agg(*aggs)
+
+
+@pytest.fixture(scope="module")
+def one_file(spark, tmp_path_factory):
+    """Mixed-sign values in ONE parquet file: a single input partition, so
+    weighted sums add up in the same order in every plan."""
+    rng = np.random.default_rng(23)
+    n = 3_000
+    v = np.round(rng.lognormal(3.0, 1.5, n), 3)
+    v[rng.random(n) < 0.2] *= -1
+    v[rng.random(n) < 0.05] = 0.0
+    path = str(tmp_path_factory.mktemp("shape_memo") / "t.parquet")
+    pd.DataFrame({"g": rng.choice(["a", "b", "c"], n), "v": v,
+                  "w": rng.uniform(0.5, 3.0, n)}).to_parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("path", ["cells", "kernel", "sql"])
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        SketchConfig(0.01),
+        SketchConfig(0.05, mode=COLLAPSE_LOWEST, bin_limit=16),
+        SketchConfig(0.05, mode=COLLAPSE_HIGHEST, bin_limit=16),
+        SketchConfig(0.01, mapping="cubic"),
+    ],
+    ids=["dense", "collapse_lowest", "collapse_highest", "cubic"],
+)
+def test_shape_hit_equals_column_finalizer(spark, one_file, cfg, path):
+    """A new quantile set of a seen shape is built from the memoized walk
+    plus a SQL-text tail; its answers and schema equal the Column-built
+    finalizer's exactly, weighted or not, grouped or global."""
+    if path == "sql" and cfg.mapping != "logarithmic":
+        pytest.skip("sql_quantile_sketch keys with the logarithmic mapping only")
+    df = one_file
+    qs = [0.0, 0.25, 0.999, 1.0]
+    for weight in (None, "w"):
+        for by in (["g"], []):
+            if path == "sql":
+                run = lambda qs: sql_quantile_sketch(  # noqa: E731
+                    df, "v", by, qs, cfg.relative_accuracy, cfg.mode, cfg.bin_limit, weight)
+                cells = build_cells(df.where(F.col("v") > 0), "v", by, cfg, weight, stats=False)
+            else:
+                run = lambda qs: quantile_sketch(  # noqa: E731
+                    df, "v", by, qs, cfg, weight, engine=path)
+                cells = (build_cells(df, "v", by, cfg, weight) if path == "cells" else
+                         _state_cells(build_partials(df, "v", by, cfg, weight), by, cfg))
+            run([0.5, 0.9])
+            shape_hits = plancache._SHAPE_HITS
+            got = run(qs)
+            assert plancache._SHAPE_HITS == shape_hits + 1
+            want = _column_finalize(cells, qs, by, cfg)
+            assert got.schema == want.schema
+            key = lambda r: tuple(r[c] for c in by)  # noqa: E731
+            assert ({key(r): r for r in got.collect()}
+                    == {key(r): r for r in want.collect()}), (weight, by)
+
+
+def test_rank_literals_parse_to_the_same_double(spark):
+    """The tail writes each quantile as ``repr(q)`` + ``D``; Spark's parser
+    must read back the same double, exponent forms included."""
+    from ddspark.agg import _rank_sql
+
+    qs = [0.0, 1e-05, 0.1, 0.30000000000000004, 1 / 3, 0.999999, 1.0]
+    arr = _rank_sql(qs)[0].split("array(")[1].split(")")[0]
+    got = spark.sql(f"SELECT array({arr}) AS a").collect()[0]["a"]
+    assert got == qs
+
+
+def test_group_columns_named_like_walk_columns(spark):
+    """Group columns named ``n`` or ``run`` keep their values: the finalize
+    window's own columns once replaced them with group totals and running
+    counts."""
+    df = spark.createDataFrame(pd.DataFrame(
+        {"n": ["a", "a", "b"], "run": [1, 1, 2], "v": [1.0, 2.0, 3.0]}))
+    for col, want in (("n", [("a", 2.0), ("b", 1.0)]), ("run", [(1, 2.0), (2, 1.0)])):
+        out = quantile_sketch(df, "v", by=[col], qs=[0.5], cfg=SketchConfig(ALPHA))
+        assert sorted(tuple(r) for r in out.select(col, "count").collect()) == want

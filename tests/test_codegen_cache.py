@@ -10,8 +10,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
-
 from ddspark import agg
 from ddspark.agg import build_cells, finalize_cells_sql, quantile_sketch
 from ddspark.session import codegen_counters
@@ -97,7 +95,7 @@ def test_shape_cycle_stays_compiled(spark, tables):
 
 def _literal_ranks(qs):
     """The earlier rank form: one ``double`` literal per quantile."""
-    return [F.lit(float(q)) * (F.col("n") - 1) for q in qs]
+    return [f"{float(q)!r}D * (_n - 1)" for q in qs]
 
 
 @pytest.mark.parametrize(
@@ -132,7 +130,7 @@ def test_array_ranks_match_literal_ranks_exactly(spark, monkeypatch, cfg, weight
         return grouped.sort_values("g").reset_index(drop=True), total
 
     got = run()
-    monkeypatch.setattr(agg, "_ranks", _literal_ranks)
+    monkeypatch.setattr(agg, "_rank_sql", _literal_ranks)
     monkeypatch.setattr(agg, "_COLUMN_CACHE", {})
     want = run()
     cells.unpersist()

@@ -6,6 +6,9 @@ established must bypass."""
 from __future__ import annotations
 
 import os
+import sys
+import threading
+import time
 
 import pandas as pd
 import pytest
@@ -13,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ddspark import plancache
 from ddspark.agg import quantile_sketch
+from ddspark.session import codegen_counters
 from ddspark.sketch import SketchConfig
 from ddspark.sqlpath import sql_quantile_sketch
 
@@ -20,9 +24,12 @@ from ddspark.sqlpath import sql_quantile_sketch
 @pytest.fixture(autouse=True)
 def _clean_cache():
     plancache._PLAN_CACHE.clear()
+    plancache._WALK_CACHE.clear()
     plancache._HITS = 0
+    plancache._SHAPE_HITS = 0
     yield
     plancache._PLAN_CACHE.clear()
+    plancache._WALK_CACHE.clear()
 
 
 def _write_parquet(path: str, values: list[float], group: str = "a") -> None:
@@ -219,3 +226,140 @@ def test_kernel_engine_memoized_separately(spark, tmp_path):
     b = {r["g"]: r["p50"] for r in kern.collect()}
     c = {r["g"]: r["p50"] for r in kern2.collect()}
     assert a == b == c
+
+
+def test_new_quantile_set_served_from_shape_map(spark, tmp_path):
+    """A seen shape with a new quantile set reuses the memoized walk: one
+    shape hit, no full-plan hit, and no class compiled to run it."""
+    p = str(tmp_path / "shape.parquet")
+    _write_parquet(p, [1.0, 2.0, 3.0, 4.0, 5.0])
+    df = spark.read.parquet(p)
+
+    def q(qs):
+        return quantile_sketch(df, "v", by=["g"], qs=qs, cfg=SketchConfig(0.01))
+
+    q([0.5, 0.9]).collect()
+    assert (plancache._HITS, plancache._SHAPE_HITS) == (0, 0)
+    compiled = codegen_counters(spark)[0]
+    out = q([0.3, 0.77])
+    assert (plancache._HITS, plancache._SHAPE_HITS) == (0, 1)
+    row = out.collect()[0]
+    assert codegen_counters(spark)[0] == compiled
+    assert row["count"] == 5.0 and row["p30"] is not None
+    assert len(plancache._WALK_CACHE) == 1 and len(plancache._PLAN_CACHE) == 2
+
+
+def test_shape_hit_recomputes_from_inputs(spark, tmp_path):
+    """The delete-the-input test for a shape hit: the memoized walk is a
+    plan, not a result, so the new quantile set's action fails once the
+    backing file is gone."""
+    p = str(tmp_path / "gone.parquet")
+    _write_parquet(p, [1.0, 2.0])
+    df = spark.read.parquet(p)
+    out = quantile_sketch(df, "v", by=["g"], qs=[0.5], cfg=SketchConfig(0.01))
+    assert out.collect()[0]["count"] == 2.0
+    fresh = quantile_sketch(df, "v", by=["g"], qs=[0.7], cfg=SketchConfig(0.01))
+    assert (plancache._HITS, plancache._SHAPE_HITS) == (0, 1)
+    os.remove(p)
+    with pytest.raises(Exception):
+        fresh.collect()
+
+
+def test_different_shapes_never_share_a_walk(spark, tmp_path):
+    """Each parameter other than the quantiles splits the walk key."""
+    p = str(tmp_path / "shapes.parquet")
+    pd.DataFrame({"g": ["a", "b"] * 3, "h": ["x"] * 6, "v": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0],
+                  "u": [6.0, 5.0, 4.0, 3.0, 2.0, 1.0], "w": [1.0, 2.0] * 3}).to_parquet(p)
+    df = spark.read.parquet(p)
+    cfg = SketchConfig(0.01)
+    calls = [
+        lambda qs: quantile_sketch(df, "v", ["g"], qs, cfg),
+        lambda qs: quantile_sketch(df, "u", ["g"], qs, cfg),
+        lambda qs: quantile_sketch(df, "v", ["h"], qs, cfg),
+        lambda qs: quantile_sketch(df, "v", [], qs, cfg),
+        lambda qs: quantile_sketch(df, "v", ["g"], qs, SketchConfig(0.02)),
+        lambda qs: quantile_sketch(df, "v", ["g"], qs, SketchConfig(0.01, mapping="cubic")),
+        lambda qs: quantile_sketch(
+            df, "v", ["g"], qs, SketchConfig(0.01, mode="collapse_lowest", bin_limit=8)),
+        lambda qs: quantile_sketch(df, "v", ["g"], qs, cfg, weight_col="w"),
+        lambda qs: quantile_sketch(df, "v", ["g"], qs, cfg, exact_stats=False),
+        lambda qs: quantile_sketch(df, "v", ["g"], qs, cfg, engine="kernel"),
+        lambda qs: sql_quantile_sketch(df, "v", ["g"], qs, 0.01),
+    ]
+    for i, call in enumerate(calls):
+        call([0.1 + 0.01 * i])
+    assert plancache._SHAPE_HITS == 0
+    assert len(plancache._WALK_CACHE) == len(calls)
+    # and each shape does reuse its own walk
+    for i, call in enumerate(calls):
+        call([0.5 + 0.01 * i])
+    assert plancache._SHAPE_HITS == len(calls) and plancache._HITS == 0
+
+
+def test_threads_share_the_memo_safely(spark, tmp_path, monkeypatch):
+    """Eight threads issue fresh and repeat calls on one session through
+    maps of one entry, so lookups, stores and FIFO evictions interleave:
+    every answer equals the memo-off answer, nothing raises, and both maps
+    stay within their bound."""
+    p = str(tmp_path / "threads.parquet")
+    _write_parquet(p, [float(i) for i in range(1, 41)])
+    df = spark.read.parquet(p)
+    cfg = SketchConfig(0.01)
+    calls = [
+        (path, qs)
+        for path in ("cells", "sql")
+        for qs in ([0.5], [0.25], [0.9], [0.5], [0.1], [0.25])
+    ]
+
+    def build(path, qs):
+        if path == "sql":
+            return sql_quantile_sketch(df, "v", ["g"], qs, 0.01)
+        return quantile_sketch(df, "v", by=["g"], qs=qs, cfg=cfg)
+
+    monkeypatch.setenv("DDSPARK_PLAN_MEMO", "0")
+    want = {(path, tuple(qs)): build(path, qs).collect() for path, qs in calls}
+    monkeypatch.delenv("DDSPARK_PLAN_MEMO")
+    monkeypatch.setattr(plancache, "_MAX_ENTRIES", 1)
+
+    class SlowDict(dict):
+        """Lets other threads run inside a bound check and an eviction."""
+
+        def __len__(self):
+            n = super().__len__()
+            time.sleep(0.002)
+            return n
+
+        def pop(self, *args):
+            out = super().pop(*args)
+            time.sleep(0.002)
+            return out
+
+    monkeypatch.setattr(plancache, "_PLAN_CACHE", SlowDict())
+    monkeypatch.setattr(plancache, "_WALK_CACHE", SlowDict())
+    errors, mismatches = [], []
+
+    def worker(t):
+        try:
+            # construction is where threads meet in the memo; collect a few
+            order = (calls[t % 4:] + calls[:t % 4]) * 3
+            built = [(path, qs, build(path, qs)) for path, qs in order]
+            for path, qs, out in built[t % 6::6]:
+                if out.collect() != want[(path, tuple(qs))]:
+                    mismatches.append((path, qs))
+        except Exception as e:  # noqa: BLE001 — StopIteration included
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == [] and mismatches == []
+    assert len(plancache._PLAN_CACHE) <= 1 and len(plancache._WALK_CACHE) <= 1
+    assert plancache._HITS + plancache._SHAPE_HITS > 0

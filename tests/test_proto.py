@@ -79,3 +79,21 @@ def test_sparse_bincounts_decoding():
 def test_gamma_only_message_requires_mapping():
     with pytest.raises(ValueError):
         sketch_from_proto_bytes(b"")
+
+
+def test_decoded_sketch_merges_with_native_sketch():
+    """At this alpha, rebuilding gamma through (gamma - 1)/(gamma + 1) moves
+    it by one ulp; the decoded sketch must still merge with a sketch built
+    at the same alpha."""
+    cfg = SketchConfig(0.13907553776888446)
+    sk = Sketch.from_values(np.array([1.0, 2.0]), cfg)
+    back = sketch_from_proto_bytes(sketch_to_proto_bytes(sk))
+    merged = Sketch.merge_all([back, Sketch.from_values(np.array([3.0]), cfg)])
+    assert merged.count == 3.0
+
+
+def test_decoded_gamma_equals_encoded_gamma_on_alpha_grid():
+    for alpha in np.linspace(0.001, 0.2, 2005):
+        sk = Sketch.from_values(np.array([1.0, 2.0]), SketchConfig(float(alpha)))
+        back = sketch_from_proto_bytes(sketch_to_proto_bytes(sk))
+        assert back.cfg.gamma == sk.cfg.gamma, alpha
